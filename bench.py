@@ -449,112 +449,116 @@ def main() -> None:
             if own_split:
                 bench_dir = own_split
 
-    # local-bench knob: the testdata tables are single ~10 MB parquet files,
-    # which the 128 MB default split turns into single-task scans; 8 MB
-    # splits let local[N] parallelize them. A real cluster keeps the default
-    # (its files are rowgroup-sized already).
-    spark = get_spark(
-        app_name="bench",
-        cpus=cpus,
-        shuffle_partitions=cpus,
-        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
-    )
-    registry.load_all()
+    # try/finally: a failed query must not leak the per-run split copy
+    # (multi-GB at sf10), mirroring the parent-pass cleanup above
+    try:
+        # local-bench knob: the testdata tables are single ~10 MB parquet files,
+        # which the 128 MB default split turns into single-task scans; 8 MB
+        # splits let local[N] parallelize them. A real cluster keeps the default
+        # (its files are rowgroup-sized already).
+        spark = get_spark(
+            app_name="bench",
+            cpus=cpus,
+            shuffle_partitions=cpus,
+            extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
+        )
+        registry.load_all()
 
-    # JVM / codegen / parquet-footer warmup outside the timed region:
-    # a small decimal aggregation over each big table compiles the same
-    # codegen shapes the headline queries use (steady-state measurement;
-    # JIT warmup is not the thing under test)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    registry.QUERIES["kpi_globals"](
-        spark, bench_dir
-    ).collect()  # warms lineitem scan + decimal agg codegen paths
+        # JVM / codegen / parquet-footer warmup outside the timed region:
+        # a small decimal aggregation over each big table compiles the same
+        # codegen shapes the headline queries use (steady-state measurement;
+        # JIT warmup is not the thing under test)
+        spark.range(1_000_000).selectExpr("sum(id)").collect()
+        registry.QUERIES["kpi_globals"](
+            spark, bench_dir
+        ).collect()  # warms lineitem scan + decimal agg codegen paths
 
-    names = [n for n in HEADLINE if n in registry.QUERIES or n in EXTRA_FNS]
-    # scaling runs restrict to a subset (comma-separated) — e.g. the heavy
-    # families at sf10, where timing all 36 would mostly measure fixed
-    # overhead 3× over. SPARK_GRAFT_QUERIES=all instead EXTENDS the set to
-    # every registry query (r7, VERDICT r6 #6: the cheap suites outside the
-    # headline had never had a recorded number) — non-headline queries are
-    # consumed with count() (they're library-surface suites; the compute is
-    # the thing timed, not driver materialization).
-    subset = os.environ.get("SPARK_GRAFT_QUERIES")
-    count_only = set(COUNT_ONLY)
-    if subset == "all":
-        extra = sorted(set(registry.QUERIES) - set(names))
-        count_only |= set(extra)
-        names = names + extra
-    elif subset:
-        keep = {s.strip() for s in subset.split(",") if s.strip()}
-        unknown = keep - set(names) - set(registry.QUERIES)
-        if unknown:
-            raise SystemExit(f"unknown queries in SPARK_GRAFT_QUERIES: {sorted(unknown)}")
-        # non-headline registry queries may be named too (r17: lets the
-        # paired-A/B tool target them); they keep FULLBENCH's count()
-        # consumption so subset numbers stay comparable with "all" runs.
-        extra = sorted(keep - set(names))
-        count_only |= set(extra)
-        names = [n for n in names if n in keep] + extra
-    timings: dict[str, float] = {}
-    total = 0.0
-    for name in names:
-        fn = registry.QUERIES.get(name) or EXTRA_FNS[name]
-        samples: list[float] = []
-        for _ in range(WARMUP):
-            clear_stream_memo()
-            df = fn(spark, bench_dir)
-            df.count() if name in count_only else df.collect()
-        for _ in range(REPS):
-            # streaming queries memoize their materialized result; forget it
-            # so every rep re-drives the engine (no-op for batch queries)
-            clear_stream_memo()
-            t0 = time.perf_counter()
-            df = fn(spark, bench_dir)
-            if name in count_only:
-                df.count()
-            else:
-                df.collect()
-            samples.append(time.perf_counter() - t0)
-        dt = sorted(samples)[len(samples) // 2]
-        timings[name] = round(dt, 4)
-        total += dt
-        # progress to stderr (stdout stays the one JSON line) — long scaling
-        # runs are otherwise a wall of stage bars with no query attribution
-        print(f"[bench] {name}: {dt:.2f}s (median of {REPS})", file=sys.stderr)
+        names = [n for n in HEADLINE if n in registry.QUERIES or n in EXTRA_FNS]
+        # scaling runs restrict to a subset (comma-separated) — e.g. the heavy
+        # families at sf10, where timing all 36 would mostly measure fixed
+        # overhead 3× over. SPARK_GRAFT_QUERIES=all instead EXTENDS the set to
+        # every registry query (r7, VERDICT r6 #6: the cheap suites outside the
+        # headline had never had a recorded number) — non-headline queries are
+        # consumed with count() (they're library-surface suites; the compute is
+        # the thing timed, not driver materialization).
+        subset = os.environ.get("SPARK_GRAFT_QUERIES")
+        count_only = set(COUNT_ONLY)
+        if subset == "all":
+            extra = sorted(set(registry.QUERIES) - set(names))
+            count_only |= set(extra)
+            names = names + extra
+        elif subset:
+            keep = {s.strip() for s in subset.split(",") if s.strip()}
+            unknown = keep - set(names) - set(registry.QUERIES)
+            if unknown:
+                raise SystemExit(f"unknown queries in SPARK_GRAFT_QUERIES: {sorted(unknown)}")
+            # non-headline registry queries may be named too (r17: lets the
+            # paired-A/B tool target them); they keep FULLBENCH's count()
+            # consumption so subset numbers stay comparable with "all" runs.
+            extra = sorted(keep - set(names))
+            count_only |= set(extra)
+            names = [n for n in names if n in keep] + extra
+        timings: dict[str, float] = {}
+        total = 0.0
+        for name in names:
+            fn = registry.QUERIES.get(name) or EXTRA_FNS[name]
+            samples: list[float] = []
+            for _ in range(WARMUP):
+                clear_stream_memo()
+                df = fn(spark, bench_dir)
+                df.count() if name in count_only else df.collect()
+            for _ in range(REPS):
+                # streaming queries memoize their materialized result; forget it
+                # so every rep re-drives the engine (no-op for batch queries)
+                clear_stream_memo()
+                t0 = time.perf_counter()
+                df = fn(spark, bench_dir)
+                if name in count_only:
+                    df.count()
+                else:
+                    df.collect()
+                samples.append(time.perf_counter() - t0)
+            dt = sorted(samples)[len(samples) // 2]
+            timings[name] = round(dt, 4)
+            total += dt
+            # progress to stderr (stdout stays the one JSON line) — long scaling
+            # runs are otherwise a wall of stage bars with no query attribution
+            print(f"[bench] {name}: {dt:.2f}s (median of {REPS})", file=sys.stderr)
 
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": round(total, 4),
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "cpus": cpus,
-        "reps": REPS,
-        "warmup": WARMUP,
-        "agg": "median",
-        "host": host,
-        # scaling-contract evidence (r17, VERDICT r16 #2/#5): the record
-        # itself proves the bench honors $SPARK_GRAFT_CPUS and says which
-        # input layout the queries actually scanned
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        "input_layout": (
-            "split:" + ",".join(f"{t}={n}" for t, n in sorted(_split_spec().items()))
-            if bench_dir != sf_dir
-            else "driver-files"
-        ),
-    }
-    final = os.environ.get("_SPARK_GRAFT_BENCH_CHILD") != "1"
-    if final:
-        _write_side_files(out)
-    # stop the JVM BEFORE printing: the executor JVM shares stdout and its
-    # async GC warnings (seen at sf10: "[gc,alloc] ... GCLocker") could
-    # otherwise interleave after the JSON line the driver tail-parses
-    spark.stop()
-    if own_split:
-        import shutil
+        out = {
+            "metric": "headline_queries_total_wall",
+            "value": round(total, 4),
+            "unit": "sec",
+            "queries": timings,
+            "sf": sf,
+            "cpus": cpus,
+            "reps": REPS,
+            "warmup": WARMUP,
+            "agg": "median",
+            "host": host,
+            # scaling-contract evidence (r17, VERDICT r16 #2/#5): the record
+            # itself proves the bench honors $SPARK_GRAFT_CPUS and says which
+            # input layout the queries actually scanned
+            "master": spark.sparkContext.master,
+            "default_parallelism": spark.sparkContext.defaultParallelism,
+            "input_layout": (
+                "split:" + ",".join(f"{t}={n}" for t, n in sorted(_split_spec().items()))
+                if bench_dir != sf_dir
+                else "driver-files"
+            ),
+        }
+        final = os.environ.get("_SPARK_GRAFT_BENCH_CHILD") != "1"
+        if final:
+            _write_side_files(out)
+        # stop the JVM BEFORE printing: the executor JVM shares stdout and its
+        # async GC warnings (seen at sf10: "[gc,alloc] ... GCLocker") could
+        # otherwise interleave after the JSON line the driver tail-parses
+        spark.stop()
+    finally:
+        if own_split:
+            import shutil
 
-        shutil.rmtree(own_split, ignore_errors=True)
+            shutil.rmtree(own_split, ignore_errors=True)
     # the ONE stdout JSON line — compact separators, printed LAST, nothing
     # after it (driver tail-captures stdout; keep this line small). A
     # child pass prints the FULL dict (the parent merge consumes it);

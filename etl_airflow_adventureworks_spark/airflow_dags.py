@@ -27,22 +27,13 @@ except ImportError:
     PythonOperator = None
     HAS_AIRFLOW = False
 
-DIM_TASKS = (
-    "etl_dim_date",
-    "etl_dim_part",
-    "etl_dim_customer_geo",
-    "etl_dim_supplier",
-    "etl_dim_locality",
-)
 
-
-def _run_dim(name: str) -> int:
-    """One dimension build+load: its own short-lived SparkSession per task
-    (the Airflow-worker equivalent of the reference's per-DAG process)."""
-    from .plans.pipeline import DIMS  # noqa: F401 (documents the task set)
-    from .registry import QUERIES, load_all
+def _run_table(name: str) -> int:
+    """One warehouse table load (``plans.pipeline.build_table`` of a
+    ``DIMS`` name or ``FACT``) in the worker's SparkSession — the
+    Airflow-worker equivalent of the reference's per-DAG process."""
+    from .plans.pipeline import build_table
     from .session import get_spark
-    from .sinks import write_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     out_dir = os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/spark_warehouse")
@@ -50,33 +41,8 @@ def _run_dim(name: str) -> int:
     # own forked process, so the session's lifetime is the task's — no
     # explicit stop() (which would tear down a shared session in-process).
     spark = get_spark(app_name=name)
-    load_all()
-    table = name.removeprefix("etl_")
-    df = QUERIES[name](spark, sf_dir)
-    write_table(df, f"{out_dir}/{table}.parquet")
-    n = spark.read.parquet(f"{out_dir}/{table}.parquet").count()
-    print(f"Carga concluída! {n} registros em {table}.")
-    return n
-
-
-def _run_fact() -> int:
-    from pyspark.sql import functions as F
-
-    from .plans.pipeline import fact_from_warehouse
-    from .session import get_spark
-    from .sinks import write_table
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    out_dir = os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/spark_warehouse")
-    spark = get_spark(app_name="etl_fact_sales")
-    fact = fact_from_warehouse(spark, sf_dir, out_dir)
-    write_table(
-        fact.withColumn("ano", (F.col("sk_tempo") / 10000).cast("int")),
-        f"{out_dir}/fact_sales.parquet",
-        partition_by=["ano"],
-    )
-    n = spark.read.parquet(f"{out_dir}/fact_sales.parquet").count()
-    print(f"Carga concluída! {n} registros em fact_sales.")
+    n = build_table(spark, sf_dir, out_dir, name)
+    print(f"Carga concluída! {n} registros em {name.removeprefix('etl_')}.")
     return n
 
 
@@ -87,6 +53,8 @@ def build_dag(dag_id: str = "etl_star_schema"):
         return None
     from datetime import datetime
 
+    from .plans.pipeline import DIMS, FACT
+
     with DAG(
         dag_id,
         start_date=datetime(2023, 1, 1),
@@ -96,14 +64,10 @@ def build_dag(dag_id: str = "etl_star_schema"):
         tags=["dw", "spark", "adventureworks"],
     ) as dag:
         dims = [
-            PythonOperator(
-                task_id=name,
-                python_callable=_run_dim,
-                op_args=[name],
-            )
-            for name in DIM_TASKS
+            PythonOperator(task_id=name, python_callable=_run_table, op_args=[name])
+            for name in DIMS
         ]
-        fact = PythonOperator(task_id="etl_fact_sales", python_callable=_run_fact)
+        fact = PythonOperator(task_id=FACT, python_callable=_run_table, op_args=[FACT])
         dims >> fact
     return dag
 

@@ -1,11 +1,13 @@
 """Materialized star-schema build — the end-to-end warehouse pipeline.
 
-Composes the plans in ``plans.star`` into an idempotent parquet warehouse,
-mirroring the reference's dimension-DAGs-then-fact ordering (README.md:113)
-— but with the dependency made explicit in code instead of a human
-instruction (SURVEY.md §3 entry point B). The fact build reads the
-materialized dims back from parquet exactly as the reference reads them
-back from Postgres (dags/etl_fato_vendas.py:17-24).
+Owns the warehouse layout: the dimension-DAGs-then-fact load order
+(README.md:113 — here explicit in code instead of a human instruction,
+SURVEY.md §3 entry point B) over the tables named in
+``sources.parquet.WAREHOUSE_TABLES``, and the fact's year partitioning.
+``build_star`` and the Airflow task callables both load through
+``build_table``. The fact build reads the materialized dims back from
+parquet exactly as the reference reads them back from Postgres
+(dags/etl_fato_vendas.py:17-24).
 """
 
 from __future__ import annotations
@@ -13,94 +15,62 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import discount_amount, net_amount
-from ..functions.scalar import yyyymmdd_key
 from ..registry import QUERIES, load_all
 from ..sinks import write_table
 from ..sources import load_table
+from ..sources.parquet import WAREHOUSE_TABLES
+from .star import fact_sales
 
-DIMS = (
-    "etl_dim_date",
-    "etl_dim_part",
-    "etl_dim_customer_geo",
-    "etl_dim_supplier",
-    "etl_dim_locality",
-)
+#: the registry query that loads each warehouse table (``etl_<table>``):
+#: every dimension, in order, then the fact after all of them
+*_DIM_TABLES, _FACT_TABLE = WAREHOUSE_TABLES
+DIMS = tuple(f"etl_{t}" for t in _DIM_TABLES)
+FACT = f"etl_{_FACT_TABLE}"
+
+
+def build_table(spark: SparkSession, sf_dir: str, out_dir: str, name: str) -> int:
+    """Load one warehouse table (a ``DIMS`` name or ``FACT``) from the
+    sources in ``sf_dir`` into ``out_dir``; returns its row count (the
+    reference's printed load count, e.g. etl_dim_produto.py:61)."""
+    table = name.removeprefix("etl_")
+    if name == FACT:
+        # partition the fact by year for downstream partition pruning (the
+        # scale replacement for the reference's fact-FK b-tree indexes)
+        fact = fact_from_warehouse(spark, sf_dir, out_dir)
+        df = fact.withColumn("ano", (F.col("sk_tempo") / 10000).cast("int"))
+        partition_by = ["ano"]
+    else:
+        load_all()
+        df, partition_by = QUERIES[name](spark, sf_dir), None
+    write_table(df, f"{out_dir}/{table}.parquet", partition_by=partition_by)
+    return load_table(spark, out_dir, table).count()
 
 
 def build_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
-    """Build dims, materialize them, then build the fact FROM the
-    materialized dims. Returns row counts per table (the reference's
-    printed load counts, e.g. etl_dim_produto.py:61)."""
-    load_all()
-    counts: dict[str, int] = {}
-    for name in DIMS:
-        table = name.removeprefix("etl_")
-        df = QUERIES[name](spark, sf_dir)
-        write_table(df, f"{out_dir}/{table}.parquet")
-        counts[table] = spark.read.parquet(f"{out_dir}/{table}.parquet").count()
-
-    fact = fact_from_warehouse(spark, sf_dir, out_dir)
-    # partition the fact by year for downstream partition pruning (the
-    # scale replacement for the reference's fact-FK b-tree indexes)
-    write_table(
-        fact.withColumn("ano", (F.col("sk_tempo") / 10000).cast("int")),
-        f"{out_dir}/fact_sales.parquet",
-        partition_by=["ano"],
-    )
-    counts["fact_sales"] = spark.read.parquet(f"{out_dir}/fact_sales.parquet").count()
-    return counts
+    """Build and materialize the dims, then the fact FROM the materialized
+    dims. Returns row counts per table."""
+    return {
+        name.removeprefix("etl_"): build_table(spark, sf_dir, out_dir, name)
+        for name in (*DIMS, FACT)
+    }
 
 
 def fact_from_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    """Fact plan joining against the *materialized* dimension parquet
+    """The fact plan joining against the *materialized* dimension tables
     (natural-key lookups, op 18) — the production shape of
     plans.star.etl_fact_sales."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
     # the customer's nation is the fact's address-grain source (the
     # reference reads the ship-to address id off the order header,
-    # etl_fato_vendas.py:60-67; testdata address grain = nation)
-    cust_src = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    dp = spark.read.parquet(f"{out_dir}/dim_part.parquet").select(
-        "sk_produto", "id_produto_original"
+    # etl_fato_vendas.py:60-67), joined on the dimension side
+    cust_nation = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    dim_customer = load_table(spark, out_dir, "dim_customer_geo").join(
+        cust_nation, F.col("id_cliente_original") == F.col("c_custkey"), "left"
     )
-    dc = spark.read.parquet(f"{out_dir}/dim_customer_geo.parquet").select(
-        "sk_cliente", "id_cliente_original"
-    )
-    dv = spark.read.parquet(f"{out_dir}/dim_supplier.parquet").select(
-        "sk_vendedor", "id_vendedor_original"
-    )
-    dl = spark.read.parquet(f"{out_dir}/dim_locality.parquet").select(
-        "sk_localidade", "id_localidade_original"
-    )
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"], "inner")
-        .join(F.broadcast(dp), li["l_partkey"] == dp["id_produto_original"], "left")
-        .join(F.broadcast(dc), orders["o_custkey"] == dc["id_cliente_original"], "left")
-        .join(F.broadcast(dv), li["l_suppkey"] == dv["id_vendedor_original"], "left")
-        .join(F.broadcast(cust_src), orders["o_custkey"] == cust_src["c_custkey"], "left")
-        .join(
-            F.broadcast(dl),
-            cust_src["c_nationkey"] == dl["id_localidade_original"],
-            "left",
-        )
-        .na.drop(subset=["sk_produto", "sk_cliente", "sk_vendedor"])
-        .select(
-            (F.col("l_orderkey") * 100 + F.col("l_linenumber")).cast("long").alias("id_venda"),
-            "sk_produto",
-            "sk_cliente",
-            "sk_vendedor",
-            "sk_localidade",
-            yyyymmdd_key(F.col("o_orderdate")).cast("long").alias("sk_tempo"),
-            F.col("l_quantity").cast("long").alias("qtd_vendida"),
-            # unit price recovered from the extended amount (the reference
-            # fact stores valor_unitario, create_dw_tables.sql:62) so the
-            # reference's KPI 1 runs verbatim over the warehouse
-            (F.col("l_extendedprice") / F.col("l_quantity")).alias("valor_unitario"),
-            discount_amount("l_extendedprice", "l_discount")
-            .cast("double")
-            .alias("valor_desconto"),
-            net_amount("l_extendedprice", "l_discount").cast("double").alias("valor_total"),
-        )
+    return fact_sales(
+        spark,
+        sf_dir,
+        load_table(spark, out_dir, "dim_part"),
+        dim_customer,
+        load_table(spark, out_dir, "dim_supplier"),
+        load_table(spark, out_dir, "dim_locality"),
     )

@@ -20,6 +20,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources import load_table
+from ..sources.parquet import WAREHOUSE_TABLES
+
+#: warehouse table -> the reference DDL's name for it (WAREHOUSE_TABLES order)
+_VIEWS = dict(zip(WAREHOUSE_TABLES, (
+    "dim_tempo", "dim_produto", "dim_cliente", "dim_vendedor", "dim_localidade", "fato_vendas"
+), strict=True))
+
 #: the 10 KPI queries with the reference's own shapes, aliases and
 #: PT-BR result names (KPIs.sql:4-83), minus the `public.` prefix.
 REFERENCE_KPI_SQL: dict[str, str] = {
@@ -81,14 +89,13 @@ REFERENCE_KPI_SQL: dict[str, str] = {
 
 
 def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> None:
-    """Map the materialized star schema onto the reference's table names."""
-    read = lambda t: spark.read.parquet(f"{warehouse_dir}/{t}.parquet")  # noqa: E731
-    read("dim_part").createOrReplaceTempView("dim_produto")
-    read("dim_supplier").createOrReplaceTempView("dim_vendedor")
-    read("dim_date").createOrReplaceTempView("dim_tempo")
-    read("dim_customer_geo").createOrReplaceTempView("dim_cliente")
-    read("dim_locality").createOrReplaceTempView("dim_localidade")
-    read("fact_sales").createOrReplaceTempView("fato_vendas")
+    """Map the materialized star schema onto the reference's table names.
+    The views sit on ``load_table``'s memoized scan handles, so re-registering
+    per query re-opens only the tables rewritten since the last KPI (a local
+    warehouse is re-checked by its commit marker, whichever process rebuilt
+    it; on a non-local URI only a same-process ``write_table`` is seen)."""
+    for table, view in _VIEWS.items():
+        load_table(spark, warehouse_dir, table).createOrReplaceTempView(view)
 
 
 def run_reference_kpi(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:

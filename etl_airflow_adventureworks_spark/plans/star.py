@@ -283,42 +283,70 @@ def etl_dim_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def etl_fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composite fact pipeline (dags/etl_fato_vendas.py:9-123) as one
-    Catalyst plan: header×detail inner join (op 17), smart date key (op 34),
-    four broadcast dimension lookups (op 18) — product, customer,
-    salesperson, and locality via the customer's nation (the reference FKs
-    the fact to dim_localidade on the ship-to address,
-    create_dw_tables.sql:57; the testdata's address grain is the nation) —
-    exact-decimal metrics (op 35), referential-integrity null-drop (op 10).
+    """The composite fact pipeline with the dim keys rebuilt inline (the
+    reference reads them back from Postgres, etl_fato_vendas.py:17-24; the
+    materialized pipeline reads them back from parquet —
+    plans.pipeline.fact_from_warehouse). ``valor_unitario`` is a
+    warehouse-only column (see ``fact_sales``)."""
+    return fact_sales(
+        spark,
+        sf_dir,
+        _dim_keys(spark, sf_dir, "part", "p_partkey", "produto"),
+        _dim_keys(spark, sf_dir, "customer", "c_custkey", "cliente", "c_nationkey"),
+        _dim_keys(spark, sf_dir, "supplier", "s_suppkey", "vendedor"),
+        _dim_keys(spark, sf_dir, "nation", "n_nationkey", "localidade"),
+    ).drop("valor_unitario")
+
+
+def _dim_keys(
+    spark: SparkSession, sf_dir: str, table: str, key: str, grain: str, *extra: str
+) -> DataFrame:
+    """The key columns of one ``etl_dim_*`` plan — ``sk_<grain>`` over the
+    natural key ``id_<grain>_original`` — without its attribute columns or
+    the joins that feed them."""
+    return load_table(spark, sf_dir, table).select(
+        surrogate_key(key).alias(f"sk_{grain}"),
+        F.col(key).alias(f"id_{grain}_original"),
+        *extra,
+    )
+
+
+def fact_sales(
+    spark: SparkSession,
+    sf_dir: str,
+    dim_part: DataFrame,
+    dim_customer: DataFrame,
+    dim_supplier: DataFrame,
+    dim_locality: DataFrame,
+) -> DataFrame:
+    """The fact plan (dags/etl_fato_vendas.py:9-123) as one Catalyst plan
+    over the four dimension frames it looks surrogate keys up in (natural
+    key ``id_*_original`` → ``sk_*``): header×detail inner join (op 17),
+    smart date key (op 34), four broadcast dimension lookups (op 18) —
+    product, customer, salesperson, and locality via the customer's nation
+    (the reference FKs the fact to dim_localidade on the ship-to address,
+    create_dw_tables.sql:57; the testdata's address grain is the nation, so
+    ``dim_customer`` carries ``c_nationkey`` and the fact stream probes one
+    customer lookup) — exact-decimal metrics (op 35), referential-integrity
+    null-drop (op 10).
 
     id_venda replaces SERIAL with a deterministic smart key
-    (orderkey*100+linenumber) — order-free, valid at any scale. The dim
-    lookups rebuild the dim keys inline (the reference reads them back from
-    Postgres, etl_fato_vendas.py:17-24; in the materialized pipeline they
-    come from parquet — see plans.pipeline)."""
+    (orderkey*100+linenumber) — order-free, valid at any scale."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    dp = load_table(spark, sf_dir, "part").select(
-        "p_partkey", surrogate_key("p_partkey").alias("sk_produto")
-    )
-    dc = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", surrogate_key("c_custkey").alias("sk_cliente")
-    )
-    dv = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", surrogate_key("s_suppkey").alias("sk_vendedor")
-    )
-    dl = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", surrogate_key("n_nationkey").alias("sk_localidade")
-    )
+    dp = dim_part.select("sk_produto", "id_produto_original")
+    dc = dim_customer.select("sk_cliente", "id_cliente_original", "c_nationkey")
+    dv = dim_supplier.select("sk_vendedor", "id_vendedor_original")
+    dl = dim_locality.select("sk_localidade", "id_localidade_original")
     return (
         # merge-pinned (r16): orders is fact-sided — never broadcastable at
         # scale; see plans.kpis._sales for the measured rationale.
         li.hint("merge")
-        .join(orders, li["l_orderkey"] == orders["o_orderkey"], "inner")
-        .join(F.broadcast(dp), li["l_partkey"] == dp["p_partkey"], "left")
-        .join(F.broadcast(dc), orders["o_custkey"] == dc["c_custkey"], "left")
-        .join(F.broadcast(dv), li["l_suppkey"] == dv["s_suppkey"], "left")
-        .join(F.broadcast(dl), dc["c_nationkey"] == dl["n_nationkey"], "left")
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"), "inner")
+        .join(F.broadcast(dp), F.col("l_partkey") == F.col("id_produto_original"), "left")
+        .join(F.broadcast(dc), F.col("o_custkey") == F.col("id_cliente_original"), "left")
+        .join(F.broadcast(dv), F.col("l_suppkey") == F.col("id_vendedor_original"), "left")
+        .join(F.broadcast(dl), F.col("c_nationkey") == F.col("id_localidade_original"), "left")
         .na.drop(subset=["sk_produto", "sk_cliente", "sk_vendedor"])
         .select(
             (F.col("l_orderkey") * 100 + F.col("l_linenumber")).cast("long").alias("id_venda"),
@@ -328,6 +356,10 @@ def etl_fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sk_localidade",
             yyyymmdd_key(F.col("o_orderdate")).cast("long").alias("sk_tempo"),
             F.col("l_quantity").cast("long").alias("qtd_vendida"),
+            # unit price recovered from the extended amount (the reference
+            # fact stores valor_unitario, create_dw_tables.sql:62) so the
+            # reference's KPI 1 runs verbatim over the warehouse
+            (F.col("l_extendedprice") / F.col("l_quantity")).alias("valor_unitario"),
             discount_amount("l_extendedprice", "l_discount")
             .cast("double")
             .alias("valor_desconto"),

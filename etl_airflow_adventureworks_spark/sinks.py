@@ -9,20 +9,10 @@ table) and a JDBC sink with batched writes for a kept-Postgres deployment.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _invalidate_scan_dir(path: str) -> None:
-    """An overwrite may target a warehouse table dir a memoized scan handle
-    points at (sources.parquet memoizes by (dir, table)) — evict that dir's
-    entries so a same-session re-read lists the fresh files (VERDICT r16
-    #4/#7). Best-effort string match on the parent dir; callers using a
-    differently-spelled alias of the same dir must invalidate themselves."""
-    from .sources.parquet import invalidate_scan_memo
-
-    invalidate_scan_memo(os.path.dirname(path.rstrip("/")))
+from .sources.parquet import invalidate_scan_memo
 
 
 def write_table(
@@ -50,7 +40,7 @@ def write_table(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
-    _invalidate_scan_dir(path)
+    invalidate_scan_memo(path)
 
 
 def write_jdbc(
@@ -132,7 +122,7 @@ def compact_table(
     fs.delete(src, True)
     if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), src):
         raise IOError(f"compact_table: rename {tmp} -> {path} failed")
-    _invalidate_scan_dir(path)
+    invalidate_scan_memo(path)
     return n_files
 
 
@@ -198,5 +188,5 @@ def write_size_targeted(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
-    _invalidate_scan_dir(path)
+    invalidate_scan_memo(path)
     return max_records

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import glob
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,6 +68,14 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: The tables ``plans.pipeline`` materializes, in load order: the
+#: dimensions, then the fact. ``load_table`` opens these from a warehouse
+#: dir like any source table.
+WAREHOUSE_TABLES = (
+    "dim_date", "dim_part", "dim_customer_geo", "dim_supplier", "dim_locality", "fact_sales"
+)
+
+
 #: per-session memo of LAZY scan handles (r16, guide §1.2/§7.3): every
 #: ``spark.read.parquet`` is driver-side work — a py4j round trip, a file
 #: listing, and a footer read for the schema (~80 ms/table measured) —
@@ -77,18 +84,17 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 #: scans the parquet from disk (this is metadata caching, NOT result
 #: caching — nothing is persisted, ``.cache()`` is never called).
 #:
-#: Lifecycle (r17, ADVICE r16): the r16 WeakKeyDictionary never actually
-#: freed anything — each memoized DataFrame strongly references its
-#: SparkSession, so the weak key stayed reachable through its own value.
-#: The memo is now a plain dict keyed by ``id(session)`` holding the
-#: session alongside its entries; ``load_table`` sweeps entries whose
-#: session has been STOPPED (a stopped session can never serve a scan
-#: again) the first time it sees a new session, and
-#: ``invalidate_scan_memo`` evicts by directory for callers that
-#: overwrite a table in place (VERDICT r16 #4/#7). Entries of a stopped
-#: session therefore live only until the next session's first load —
-#: bounded by construction, instead of "until interpreter exit".
-_SCAN_MEMO: dict[int, tuple[SparkSession, dict[tuple[str, str], DataFrame]]] = {}
+#: Lifecycle: a plain dict keyed by ``id(session)`` holding the session
+#: alongside its entries (a memoized DataFrame strongly references its
+#: session, so a weak key would never be freed). Entries are keyed by the
+#: table's normalized path (``_table_key``), so every spelling of one
+#: table — relative, trailing ``/``, ``./`` segments, symlinks — shares
+#: one entry and one eviction, and carry the table's change stamp
+#: (``_table_stamp``) from when they were opened. Every ``load_table`` and
+#: ``invalidate_scan_memo`` call drops the entries of STOPPED sessions
+#: (their py4j handles can never serve a scan again); writers that
+#: overwrite a table in place evict it via ``invalidate_scan_memo``.
+_SCAN_MEMO: dict[int, tuple[SparkSession, dict[str, tuple[tuple | None, DataFrame]]]] = {}
 
 
 def _session_live(spark: SparkSession) -> bool:
@@ -96,55 +102,84 @@ def _session_live(spark: SparkSession) -> bool:
     return sc is not None and getattr(sc, "_jsc", None) is not None
 
 
-def invalidate_scan_memo(sf_dir: str | None = None) -> None:
-    """Evict memoized scan handles for ``sf_dir`` (every session), or ALL
-    handles when called without arguments. Required when a table directory
-    is overwritten in place and re-read through ``load_table`` within the
-    same session — the memoized plan would otherwise serve the old file
-    listing. Writers that target a warehouse dir (sinks.write_table) call
-    this themselves."""
-    for sid, (_, entries) in list(_SCAN_MEMO.items()):
-        if sf_dir is None:
-            entries.clear()
-        else:
-            for key in [k for k in entries if k[0] == sf_dir]:
-                del entries[key]
+def _sweep_stopped_sessions() -> None:
+    for dead in [s for s, (sess, _) in _SCAN_MEMO.items() if not _session_live(sess)]:
+        del _SCAN_MEMO[dead]
+
+
+def _table_key(path: str) -> str:
+    """Memo key of a table path: the absolute, symlink-resolved local path;
+    a non-local URI (``s3a://``, ``hdfs://``) keyed as spelled, minus a
+    trailing ``/``."""
+    if "://" in path and not path.startswith("file://"):
+        return path.rstrip("/")
+    return os.path.realpath(path.removeprefix("file://"))
+
+
+def _table_stamp(key: str) -> tuple[int, int] | None:
+    """Change stamp of a local table: (inode, mtime_ns) of its commit
+    marker ``_SUCCESS`` — rewritten by every committed Spark write, from
+    this process or another — or of the path itself when it has none (a
+    single-file table). None for a non-local URI or a missing path."""
+    if "://" in key:
+        return None
+    for p in (os.path.join(key, "_SUCCESS"), key):
+        try:
+            st = os.stat(p)
+        except OSError:
+            continue
+        return st.st_ino, st.st_mtime_ns
+    return None
+
+
+def invalidate_scan_memo(path: str | None = None) -> None:
+    """Evict memoized scan handles for the table at ``path``, or for every
+    table under ``path`` when it is a directory of tables (every session);
+    evict ALL handles when called without arguments. Required when a
+    table is overwritten in place and re-read through ``load_table``
+    within the same session — the memoized plan would otherwise serve the
+    old file listing. The sinks call this for every path they write."""
+    _sweep_stopped_sessions()
+    key = None if path is None else _table_key(path)
+    for _, entries in _SCAN_MEMO.values():
+        for k in [k for k in entries
+                  if key is None or k == key or k.startswith(key + os.sep)]:
+            del entries[k]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table. Parquet embeds the schema — no inference race.
+    """Open one named table under ``sf_dir``: a testdata source table
+    (``TABLES``) or a materialized warehouse table (``WAREHOUSE_TABLES``).
+    Parquet embeds the schema — no inference race.
 
     ``events.ts`` has shipped as TIMESTAMP(NANOS) (which Spark's vectorized
     reader refuses by default — read nanos as long via the runtime legacy
     conf) and as TIMESTAMP(MICROS) NTZ in newer driver snapshots; either way
     it normalizes to the session-UTC µs TimestampType every downstream
     query assumes.
+
+    A memoized handle is reused only while the table's change stamp is
+    unchanged, so a local table rewritten by another process (an Airflow
+    task's rebuild) is re-opened; on a non-local URI only a same-process
+    overwrite through ``sinks`` (or ``invalidate_scan_memo``) is seen.
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    sid = id(spark)
-    hit = _SCAN_MEMO.get(sid)
-    if hit is None:
-        # first sighting of this session: drop stopped sessions' entries
-        # (their py4j handles are dead weight and can never be served)
-        for dead in [s for s, (sess, _) in _SCAN_MEMO.items()
-                     if not _session_live(sess)]:
-            del _SCAN_MEMO[dead]
-        per_session: dict[tuple[str, str], DataFrame] = {}
-        _SCAN_MEMO[sid] = (spark, per_session)
-    else:
-        per_session = hit[1]
-    key = (sf_dir, name)
+    if name not in TABLES and name not in WAREHOUSE_TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES + WAREHOUSE_TABLES}")
+    _sweep_stopped_sessions()
+    per_session = _SCAN_MEMO.setdefault(id(spark), (spark, {}))[1]
+    path = f"{sf_dir}/{name}.parquet"
+    key = _table_key(path)
+    stamp = _table_stamp(key)
     cached = per_session.get(key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == stamp:
+        return cached[1]
     if name == "events":
         if events_ts_physical_type(sf_dir) == "timestamp[ns]":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+        df = normalize_events_ts(spark.read.parquet(path))
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    per_session[key] = df
+        df = spark.read.parquet(path)
+    per_session[key] = (stamp, df)
     return df
 
 

@@ -384,8 +384,7 @@ def clear_stream_memo() -> None:
 #: instance that must be opened, committed and checkpointed EVERY
 #: micro-batch — with the session's 32 shuffle partitions over a 2 MB
 #: events file, state-store lifecycle was ~75% of the harness wall time
-#: (measured 6.2 s → 1.6 s per run at sf0.1 after sizing). Overridable
-#: per deployment via SPARK_GRAFT_STREAM_STATE_PARTITIONS.
+#: (measured 6.2 s → 1.6 s per run at sf0.1 after sizing).
 _STATE_PARTITION_BYTES = 64 * 1024 * 1024
 
 
@@ -397,15 +396,6 @@ def _harness_state_partitions(spark: SparkSession, sf_dir: str) -> int | None:
     real stream wants state partitions ~ executor cores, set via the
     session conf this derives from). Non-local sources return None — the
     session default stands, since file size isn't POSIX-visible there."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        try:
-            return int(env)
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer "
-                f"partition count, got {env!r}"
-            ) from None
     try:
         path = f"{sf_dir}/events.parquet"
         if os.path.isdir(path):  # multi-file table (r17 bench layout)

@@ -24,3 +24,13 @@ SF_ORACLE = _ORACLE_SF if _ORACLE_SF.startswith("/") else f"/root/testdata/{_ORA
 def spark():
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def smoke_star(spark, tmp_path_factory):
+    """One ``build_star`` at SF_SMOKE for the tests that only read a built
+    warehouse: (warehouse dir, row counts per table)."""
+    from etl_airflow_adventureworks_spark.plans.pipeline import build_star
+
+    out = str(tmp_path_factory.mktemp("smoke_star"))
+    return out, build_star(spark, SF_SMOKE, out)

@@ -8,6 +8,7 @@ import os
 from conftest import SF_SMOKE
 
 from etl_airflow_adventureworks_spark import airflow_dags
+from etl_airflow_adventureworks_spark.plans.pipeline import DIMS, FACT
 
 
 def test_module_imports_without_airflow():
@@ -17,18 +18,11 @@ def test_module_imports_without_airflow():
         assert airflow_dags.build_dag() is None
 
 
-def test_task_callables_run(tmp_path, monkeypatch):
+def test_task_callables_run(smoke_star, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMOKE)
     monkeypatch.setenv("SPARK_WAREHOUSE_DIR", str(tmp_path / "wh"))
-    n_dim = airflow_dags._run_dim("etl_dim_supplier")
-    assert n_dim > 0
-    for name in (
-        "etl_dim_date",
-        "etl_dim_part",
-        "etl_dim_customer_geo",
-        "etl_dim_locality",
-    ):
-        airflow_dags._run_dim(name)
-    n_fact = airflow_dags._run_fact()
-    assert n_fact > 0
+    counts = {name.removeprefix("etl_"): airflow_dags._run_table(name) for name in (*DIMS, FACT)}
+    assert all(n > 0 for n in counts.values())
     assert os.path.exists(tmp_path / "wh" / "fact_sales.parquet")
+    # the tasks load through the same build_table as build_star
+    assert counts == smoke_star[1]

@@ -7,6 +7,9 @@ from pyspark.sql import functions as F
 from conftest import SF_SMOKE
 
 from etl_airflow_adventureworks_spark.plans.pipeline import build_star
+from etl_airflow_adventureworks_spark.registry import QUERIES, load_all
+from etl_airflow_adventureworks_spark.sources import load_table
+from etl_airflow_adventureworks_spark.sources.parquet import WAREHOUSE_TABLES
 
 
 def test_build_star_end_to_end(spark, tmp_path):
@@ -23,6 +26,18 @@ def test_build_star_end_to_end(spark, tmp_path):
     # reference's TRUNCATE-before-load contract, etl_dim_produto.py:50-59)
     counts2 = build_star(spark, SF_SMOKE, out)
     assert counts == counts2
+    assert set(counts) == set(WAREHOUSE_TABLES)
+
+    # one fact plan: over the materialized dims it yields the registry
+    # etl_fact_sales rows (whose DuckDB oracle pins them) plus the
+    # warehouse-only valor_unitario and the ano partition column
+    load_all()
+    want = QUERIES["etl_fact_sales"](spark, SF_SMOKE)
+    got = load_table(spark, out, "fact_sales")
+    assert set(got.columns) - set(want.columns) == {"valor_unitario", "ano"}
+    assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
     # fact is partitioned by year → partition pruning works
     fact = spark.read.parquet(f"{out}/fact_sales.parquet")
@@ -37,3 +52,4 @@ def test_build_star_end_to_end(spark, tmp_path):
         dim_part, fact["sk_produto"] == dim_part["sk_produto"], "left_anti"
     ).count()
     assert orphans == 0
+

@@ -12,6 +12,8 @@ parity suite and the result-identity twin tests):
 
 from __future__ import annotations
 
+import os
+
 from etl_airflow_adventureworks_spark.sources import load_table
 from etl_airflow_adventureworks_spark.sources.parquet import _SCAN_MEMO
 from etl_airflow_adventureworks_spark.streaming.events import (
@@ -50,7 +52,7 @@ def test_scan_memo_is_plan_cache_not_result_cache(spark):
 def test_scan_memo_keyed_by_live_session(spark):
     before = load_table(spark, SF, "nation")
     assert id(spark) in _SCAN_MEMO
-    assert (SF, "nation") in _SCAN_MEMO[id(spark)][1]
+    assert os.path.realpath(f"{SF}/nation.parquet") in _SCAN_MEMO[id(spark)][1]
     # a different session object gets its own entry: simulate with
     # newSession(), which shares the context but is a distinct key
     s2 = spark.newSession()
@@ -59,20 +61,14 @@ def test_scan_memo_keyed_by_live_session(spark):
     assert load_table(spark, SF, "nation") is before
 
 
-def test_harness_state_partitions_scale_adaptive(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+def test_harness_state_partitions_scale_adaptive(spark):
     # tiny local source → the floor (4), never the session's conf (8)
     assert _harness_state_partitions(spark, SF) == 4
-    # env override wins outright
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
-    assert _harness_state_partitions(spark, SF) == 2
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     # non-local / missing source → None (the session default stands)
     assert _harness_state_partitions(spark, "/nonexistent/dir") is None
 
 
 def test_harness_state_partitions_capped_at_session_conf(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
     # a huge source can never exceed the session conf (the cluster knob).
     # Pin the conf for the assertion — the shared suite session's value may
     # have been changed by an earlier module — and restore it after.

@@ -3,26 +3,27 @@ with the engine's native KPI queries computed from the raw tables."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from conftest import SF_SMOKE
 
 import __spark_entry__ as entrymod
 from etl_airflow_adventureworks_spark.plans.kpis import KPI_DF
-from etl_airflow_adventureworks_spark.plans.pipeline import build_star
 from etl_airflow_adventureworks_spark.plans.reference_kpis import (
     REFERENCE_KPI_SQL,
     run_reference_kpi,
 )
+from etl_airflow_adventureworks_spark.sinks import write_table
+from etl_airflow_adventureworks_spark.sources import load_table
 
 REL = 1e-9  # warehouse stores doubles; internal-consistency, not oracle-hash
 
 
 @pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("ref_wh"))
-    build_star(spark, SF_SMOKE, out)
-    return out
+def warehouse(smoke_star):
+    return smoke_star[0]
 
 
 def _one(df):
@@ -74,3 +75,24 @@ def test_seasonality_agrees(spark, warehouse):
     for k, (nome, val) in ref.items():
         assert nome == native[k][0]
         assert val == pytest.approx(native[k][1], rel=REL)
+
+
+@pytest.mark.parametrize("writer", ["write_table", "plain_overwrite"])
+def test_rewritten_fact_is_seen(spark, warehouse, tmp_path, writer):
+    # the views sit on memoized scan handles: a fact rewritten in place —
+    # by a same-session write_table, or by a writer that bypasses the sinks
+    # (another process's rebuild) — must be re-opened by the next KPI
+    out = str(tmp_path / "wh")
+    shutil.copytree(warehouse, out)
+    qty = _one(run_reference_kpi(spark, out, "kpi4_total_itens"))
+    assert qty == _one(KPI_DF["kpi04_total_volume"](spark, SF_SMOKE))
+    fact = load_table(spark, out, "fact_sales")
+    rows = fact.limit(3).collect()
+    new = spark.createDataFrame(rows, fact.schema)
+    if writer == "write_table":
+        write_table(new, f"{out}/fact_sales.parquet", partition_by=["ano"])
+    else:
+        new.write.mode("overwrite").partitionBy("ano").parquet(f"{out}/fact_sales.parquet")
+    assert _one(run_reference_kpi(spark, out, "kpi4_total_itens")) == sum(
+        r["qtd_vendida"] for r in rows
+    )
