@@ -197,8 +197,20 @@ def _split_spec() -> dict[str, int]:
         return dict(_SPLIT_TABLES_DEFAULT)
     spec = {}
     for part in env.split(","):
-        t, n = part.split("=")
-        spec[t.strip()] = int(n)
+        t, sep, n = part.partition("=")
+        t = t.strip()
+        if not sep or not t or not n.strip().isdigit():
+            raise ValueError(
+                f"SPARK_GRAFT_BENCH_SPLIT_TABLES entry {part!r} is not table=n"
+            )
+        if t == "events":
+            # the events file count is the streaming rows' micro-batch
+            # schedule (see _SPLIT_TABLES_DEFAULT): events stays one file
+            raise ValueError(
+                "SPARK_GRAFT_BENCH_SPLIT_TABLES cannot split events: its "
+                "file count is the streaming rows' trigger schedule"
+            )
+        spec[t] = int(n)
     return spec
 
 

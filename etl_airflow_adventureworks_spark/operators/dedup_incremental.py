@@ -10,14 +10,12 @@ persists the reusable per-document state once — hashed shingle sets
 (`hh`, for the exact-Jaccard verify) and the 32-permutation MinHash
 signature (`sig`, for LSH banding) — as a `VersionedTable`
 (atomic manifests, time travel, idempotent appends), and checks each
-new batch with plans that only ever SCAN the corpus:
-
-- candidate generation: the batch's band rows (tiny) BROADCAST against a
-  column-pruned (doc_id, sig) scan of the index — the corpus is never
-  shuffled, and matches are ∝ LSH collisions;
-- verify: one more column-pruned (doc_id, hh) scan of the index,
-  semi-joined down to just the candidate ids, then exact Jaccard on the
-  fetched (small) shingle sets.
+new batch with a plan that SCANS the corpus once and never shuffles it:
+one column-pruned (doc_id, sig, hh) pass over the index builds band rows,
+probes the batch's band rows (tiny, BROADCAST) and verifies each
+collision's exact Jaccard against the batch's broadcast shingle sets in
+the same stage — candidate generation and verification are one pipeline,
+and its output is ∝ LSH collisions.
 
 Signatures here are computed per-row (`array_min(transform(...))`) —
 identical values to `dedup.minhash_signatures`'s explode+groupBy form
@@ -55,6 +53,13 @@ _BANDS_EXPR = (
     " b -> concat(element_at(sig, 2*b + 1), ',', element_at(sig, 2*b + 2)))"
 )
 
+#: the 32-long row-local MinHash signature of ``hh``, as ONE expression
+#: (one parse per plan instead of one per permutation)
+_SIG_EXPR = "array({}) AS sig".format(", ".join(
+    f"array_min(transform(hh, h -> pmod({a}L * h + {b}L, {_MERSENNE_P}L)))"
+    for a, b in zip(_PERM_A, _PERM_B)
+))
+
 
 def _require_doc_frame(docs: DataFrame, what: str) -> None:
     missing = {"doc_id", "text"} - set(docs.columns)
@@ -75,15 +80,7 @@ def neardup_index_entries(docs: DataFrame) -> DataFrame:
     full-corpus jobs where codegen'd partial mins win.
     """
     _require_doc_frame(docs, "neardup_index_entries")
-    sig = F.array(
-        *[
-            F.expr(
-                f"array_min(transform(hh, h -> pmod({a}L * h + {b}L, {_MERSENNE_P}L)))"
-            )
-            for a, b in zip(_PERM_A, _PERM_B)
-        ]
-    ).alias("sig")
-    return hashed_shingle_sets_df(docs).select("doc_id", "hh", sig)
+    return hashed_shingle_sets_df(docs).selectExpr("doc_id", "hh", _SIG_EXPR)
 
 
 def _cluster_entries(entries: DataFrame, num_files: int | None):
@@ -176,14 +173,28 @@ _ENTRY_BYTES_PER_TEXT_BYTE = 1.6
 _ENTRY_FIXED_BYTES = 384
 
 
+def _num_files_for(rows: int, text_bytes: int) -> int:
+    """Output file count for an append of ``rows`` documents holding
+    ``text_bytes`` of text: the estimated stored entry bytes (shingle-hash
+    arrays scale with document text) over the 128 MiB file target,
+    rounded up — so a LARGE batch lands as several key-local files
+    instead of one oversized file spanning the whole batch key range
+    (which every later copy-on-write sync would rewrite wholesale,
+    ADVICE r11). The one sizing rule of both callers: `_batch_num_files`
+    and the ingest gate, which reads the two numbers off the accepted
+    frame's own count aggregation."""
+    import math
+
+    entry_bytes = (
+        rows * _ENTRY_FIXED_BYTES
+        + int(text_bytes * _ENTRY_BYTES_PER_TEXT_BYTE)
+    )
+    return max(1, math.ceil(entry_bytes / _APPEND_TARGET_FILE_BYTES))
+
+
 def _batch_num_files(spark: SparkSession, docs: DataFrame) -> int:
-    """Output file count for an append batch, derived from the batch's
-    MEASURED text volume: one column-pruned ``(count, sum(length(text)))``
-    agg estimates the stored entry bytes (shingle-hash arrays scale with
-    document text), and the count is ``ceil(entry bytes / 128 MiB)`` —
-    so a LARGE batch lands as several key-local files instead of one
-    oversized file spanning the whole batch key range (which every later
-    copy-on-write sync would rewrite wholesale, ADVICE r11).
+    """`_num_files_for` over the batch's MEASURED text volume: one
+    column-pruned ``(count, sum(length(text)))`` agg.
 
     r13 (ADVICE r12): measuring the batch itself replaced the earlier
     input-file-bytes proxy + row cap — the proxy over-counted a FILTERED
@@ -194,17 +205,10 @@ def _batch_num_files(spark: SparkSession, docs: DataFrame) -> int:
     are actually in the batch, so both failure modes are gone; cost is
     one batch-sized pass over a column the append is about to shingle
     anyway."""
-    import math
-
     row = docs.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.length("text")).alias("tb")
     ).first()
-    rows, text_bytes = int(row["n"] or 0), int(row["tb"] or 0)
-    entry_bytes = (
-        rows * _ENTRY_FIXED_BYTES
-        + int(text_bytes * _ENTRY_BYTES_PER_TEXT_BYTE)
-    )
-    return max(1, math.ceil(entry_bytes / _APPEND_TARGET_FILE_BYTES))
+    return _num_files_for(int(row["n"] or 0), int(row["tb"] or 0))
 
 
 def append_to_neardup_index(
@@ -570,9 +574,74 @@ def maintain_neardup_index(
             "index_version": idx.manifest()["version"]}
 
 
-def _bands(entries: DataFrame) -> DataFrame:
+def _bands(entries: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, band_idx, band_key) — one row per LSH band."""
     return entries.select(
-        "doc_id", F.posexplode(F.expr(_BANDS_EXPR)).alias("band_idx", "band_key")
+        "doc_id", *carry,
+        F.posexplode(F.expr(_BANDS_EXPR)).alias("band_idx", "band_key"),
+    )
+
+
+def _incremental_pairs(
+    spark: SparkSession,
+    new_docs: DataFrame,
+    index_path: str,
+    version: int | None = None,
+    threshold: float = JACCARD_THRESHOLD,
+) -> DataFrame:
+    """Unordered core of `minhash_neardup_incremental` (the ingest gate
+    consumes it directly): (doc_a, doc_b, jaccard), each pair once."""
+    _require_doc_frame(new_docs, "minhash_neardup_incremental")
+    idx = VersionedTable(spark, index_path).read(version)
+    new = neardup_index_entries(new_docs).localCheckpoint(eager=True)
+    nb = _bands(new)
+    sh = new.select("doc_id", "hh")
+
+    def verified(pairs: DataFrame, sh_a: str, sh_b: str) -> DataFrame:
+        inter = F.size(F.array_intersect(sh_a, sh_b))
+        jac = inter.cast("double") / (F.size(sh_a) + F.size(sh_b) - inter)
+        return pairs.filter(jac >= threshold).select(
+            "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
+        )
+
+    # batch vs index: ONE pass over the index — its band rows carry the
+    # stored shingle set, probe the broadcast batch bands, and are
+    # verified against the broadcast batch shingle sets in the same stage
+    cross = (
+        _bands(idx.select("doc_id", "sig", F.col("hh").alias("sh_old")), "sh_old")
+        .withColumnRenamed("doc_id", "old_id")
+        .join(F.broadcast(nb.withColumnRenamed("doc_id", "new_id")),
+              ["band_idx", "band_key"])
+        .filter(F.col("new_id") != F.col("old_id"))
+        .join(F.broadcast(sh.toDF("new_id", "sh_new")), "new_id")
+        .select(
+            F.least("new_id", "old_id").alias("doc_a"),
+            F.greatest("new_id", "old_id").alias("doc_b"),
+            "sh_old", "sh_new",
+        )
+    )
+    # batch-internal pairs from the batch's own entries only: same
+    # in-bucket expansion as the batch op
+    within = (
+        nb.groupBy("band_idx", "band_key")
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .selectExpr(
+            "explode(flatten(transform(sequence(1, size(ids) - 1),"
+            " i -> transform(slice(ids, i + 1, size(ids) - i),"
+            " y -> named_struct('doc_a', element_at(ids, i), 'doc_b', y))))) AS pair"
+        )
+        .select("pair.doc_a", "pair.doc_b")
+        .join(F.broadcast(sh.toDF("doc_a", "sh_a")), "doc_a")
+        .join(F.broadcast(sh.toDF("doc_b", "sh_b")), "doc_b")
+    )
+    # a pair colliding in several bands (or, on a replayed batch whose
+    # docs are already indexed, reached from both sides with identical
+    # shingle sets) verifies to the same row: distinct keeps it once
+    return (
+        verified(cross, "sh_old", "sh_new")
+        .unionByName(verified(within, "sh_a", "sh_b"))
+        .distinct()
     )
 
 
@@ -587,71 +656,24 @@ def minhash_neardup_incremental(
     (default latest) — batch-vs-corpus AND batch-internal pairs, exactly
     the full-corpus operator's output restricted to pairs that touch the
     batch: (doc_a, doc_b, jaccard) with doc_a < doc_b, Jaccard ≥
-    ``threshold``, verified exactly on the stored shingle sets.
+    ``threshold``, verified exactly on the stored shingle sets, ordered
+    by (doc_a, doc_b).
 
-    Plan: the batch's band rows broadcast against a (doc_id, sig)-pruned
-    index scan (corpus never shuffles; matches ∝ collisions); batch-
-    internal candidates come from in-bucket expansion of the batch's own
-    bands (tiny). The three BOUNDED frames (batch entries, candidate
-    pairs, fetched shingle sets — all batch- or collision-sized, never
-    corpus-sized) are eagerly localCheckpoint'd because multiple branches
-    reuse each and re-deriving them would re-scan the index per branch.
-    Verify fetches only the candidate ids' shingle sets via one more
-    pruned index scan.
+    Plan: one column-pruned (doc_id, sig, hh) scan of the index builds
+    band rows, probes the batch's broadcast band rows (the corpus never
+    shuffles; matches ∝ collisions), drops self pairs and runs the exact
+    Jaccard filter against the batch's broadcast shingle sets in the
+    same stage. Batch-internal candidates come from in-bucket expansion
+    of the batch's own bands (tiny). The one BOUNDED frame the plan
+    reuses — the batch entries, read by the band rows, the broadcast
+    shingle sets and the batch-internal branch — is eagerly
+    localCheckpoint'd; nothing corpus- or collision-sized is.
 
     A doc_id present in BOTH the batch and the index is treated as the
-    same document (self-pairs excluded) — append batches with fresh ids.
+    same document (self-pairs excluded, each pair emitted once) — append
+    batches with fresh ids, or replay a batch an interrupted ingest had
+    already appended.
     """
-    _require_doc_frame(new_docs, "minhash_neardup_incremental")
-    idx = VersionedTable(spark, index_path).read(version)
-    new = neardup_index_entries(new_docs).localCheckpoint(eager=True)
-    nb, ib = _bands(new), _bands(idx)
-
-    cross = (
-        ib.withColumnRenamed("doc_id", "old_id")
-        .join(F.broadcast(nb.withColumnRenamed("doc_id", "new_id")),
-              ["band_idx", "band_key"])
-        .filter(F.col("new_id") != F.col("old_id"))
-        .select(
-            F.least("new_id", "old_id").alias("doc_a"),
-            F.greatest("new_id", "old_id").alias("doc_b"),
-        )
-    )
-    # batch-internal candidates: same in-bucket expansion as the batch op
-    within = (
-        nb.groupBy("band_idx", "band_key")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .selectExpr(
-            "explode(flatten(transform(sequence(1, size(ids) - 1),"
-            " i -> transform(slice(ids, i + 1, size(ids) - i),"
-            " y -> named_struct('doc_a', element_at(ids, i), 'doc_b', y))))) AS pair"
-        )
-        .select("pair.doc_a", "pair.doc_b")
-    )
-    cand = cross.unionByName(within).distinct().localCheckpoint(eager=True)
-
-    ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select("doc_b"))
-        .distinct()
-    )
-    have = idx.select("doc_id", "hh").unionByName(new.select("doc_id", "hh"))
-    # docs in both batch and index contribute identical (doc_id, hh) rows
-    # twice; collapse so the verify joins stay 1:1
-    need = (
-        have.join(F.broadcast(ids), "doc_id")
-        .groupBy("doc_id").agg(F.first("hh").alias("hh"))
-        .localCheckpoint(eager=True)
-    )
-    sa = need.select(F.col("doc_id").alias("doc_a"), F.col("hh").alias("sh_a"))
-    sb = need.select(F.col("doc_id").alias("doc_b"), F.col("hh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return _incremental_pairs(
+        spark, new_docs, index_path, version, threshold
+    ).orderBy("doc_a", "doc_b")

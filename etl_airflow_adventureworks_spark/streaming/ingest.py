@@ -6,8 +6,8 @@ everything already accepted BEFORE it is admitted, without ever
 re-shuffling the corpus. This composes three proven pieces:
 
 - `operators.dedup_incremental`: batch-vs-index near-dup pairs whose
-  only corpus access is a column-pruned SCAN of the persisted MinHash
-  index (never a corpus shuffle);
+  only corpus access is ONE column-pruned SCAN of the persisted MinHash
+  index, candidates verified in the same pass (never a corpus shuffle);
 - `table.VersionedTable`: atomic manifests with idempotency tokens, so
   a crash-replayed micro-batch is a detected no-op per table;
 - Structured Streaming `foreachBatch` with a checkpoint, so the source
@@ -41,9 +41,10 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import JACCARD_THRESHOLD
 from ..operators.dedup_incremental import (
+    _incremental_pairs,
+    _num_files_for,
     _require_doc_frame,
     append_to_neardup_index,
-    minhash_neardup_incremental,
 )
 from ..table import VersionedTable
 
@@ -56,18 +57,20 @@ def rejected_doc_ids(pairs: DataFrame, batch_ids: DataFrame) -> DataFrame:
     A batch member is rejected iff some partner is NOT in the batch
     (i.e. lives in the index — already accepted, always wins) or is a
     lower-id batch member. Pure column algebra over the collision-sized
-    pair set; the corpus is never consulted.
+    pair set, read in ONE pass (each pair yields both of its member
+    rows); the corpus is never consulted.
     """
-    members = pairs.selectExpr(
-        "doc_a AS member", "doc_b AS partner"
-    ).unionByName(pairs.selectExpr("doc_b AS member", "doc_a AS partner"))
-    b = F.broadcast(batch_ids.select("doc_id").distinct())
-    in_batch = b.withColumnRenamed("doc_id", "member")
-    partner_in_batch = b.selectExpr("doc_id AS partner", "true AS p_in_batch")
+    members = pairs.select(F.inline(F.array(
+        F.struct(F.col("doc_a").alias("member"), F.col("doc_b").alias("partner")),
+        F.struct(F.col("doc_b").alias("member"), F.col("doc_a").alias("partner")),
+    )))
+    # one broadcast serves both joins; a repeated id only repeats rows,
+    # which the final distinct folds
+    ids = F.broadcast(batch_ids.select("doc_id"))
     return (
-        members.join(in_batch, "member")  # only batch members can be rejected
-        .join(partner_in_batch, "partner", "left")
-        .filter(F.col("p_in_batch").isNull() | (F.col("partner") < F.col("member")))
+        members.join(ids.toDF("member"), "member")  # only batch members can be rejected
+        .join(ids.toDF("p"), F.col("partner") == F.col("p"), "left")
+        .filter(F.col("p").isNull() | (F.col("partner") < F.col("member")))
         .select(F.col("member").alias("doc_id"))
         .distinct()
     )
@@ -86,39 +89,57 @@ def ingest_batch_with_dedup(
     ``{"accepted": n, "rejected": n}``. Usable directly for batch
     (non-streaming) ingestion; `stream_ingest_with_dedup` calls it per
     micro-batch with the streaming epoch as the idempotency basis.
+
+    Each batch-sized frame is computed once: the batch, its index
+    entries (inside the pair probe), the rejected ids and the accepted
+    rows are each materialized once (``localCheckpoint``), and the index
+    is scanned once. One aggregation over the batch's id counts gives
+    its size and rules out repeated ids; one over the accepted rows
+    gives the result counts and the append's file count.
     """
     _require_doc_frame(batch, "ingest_batch_with_dedup")
     spark = batch.sparkSession
     token = f"epoch:{epoch_id}"
     batch = batch.select("doc_id", "text").localCheckpoint(eager=True)
-    if not batch.take(1):
+    shape = (
+        batch.groupBy("doc_id").count()
+        .agg(F.sum("count").alias("rows"), F.max("count").alias("most"))
+        .first()
+    )
+    n = int(shape["rows"] or 0)
+    if not n:
         # no-data micro-batch: nothing to admit, and skipping the token
         # is safe (a replayed empty batch re-skips identically)
         return {"accepted": 0, "rejected": 0}
-    dup = batch.groupBy("doc_id").count().filter("count > 1").take(1)
-    if dup:
+    if shape["most"] > 1:
         # a duplicated id inside one batch would append the same doc_id
         # to the corpus twice (the greedy rule accepts/rejects the id as
         # a unit) — fail before any table is touched
+        dup = batch.groupBy("doc_id").count().filter("count > 1").first()
         raise ValueError(
-            f"ingest batch has duplicate doc_id {dup[0]['doc_id']}; "
+            f"ingest batch has duplicate doc_id {dup['doc_id']}; "
             "batch ids must be unique (dedup the batch first)"
         )
 
-    pairs = minhash_neardup_incremental(
-        spark, batch, index_path, threshold=threshold
-    ).localCheckpoint(eager=True)
-    bad = rejected_doc_ids(pairs, batch.select("doc_id"))
+    pairs = _incremental_pairs(spark, batch, index_path, threshold=threshold)
+    if audit_path is not None:
+        pairs = pairs.localCheckpoint(eager=True)  # the audit commit reads it too
+    bad = rejected_doc_ids(pairs, batch.select("doc_id")).localCheckpoint(eager=True)
     accepted = batch.join(F.broadcast(bad), "doc_id", "left_anti").localCheckpoint(
         eager=True
     )
+    size = accepted.agg(
+        F.count(F.lit(1)).alias("rows"), F.sum(F.length("text")).alias("tb")
+    ).first()
+    n_acc = int(size["rows"])
 
     # through the shared append path (r12): the batch's entries land
     # key-clustered with doc_id stats and a patch-op marker, so later
     # syncs can PRUNE to them and the maintain policy's fragmentation
     # baseline never mistakes an epoch's append for a clustered layout
     append_to_neardup_index(spark, accepted, index_path,
-                            idempotency_token=token)
+                            idempotency_token=token,
+                            num_files=_num_files_for(n_acc, int(size["tb"] or 0)))
     VersionedTable(spark, corpus_path).commit(
         accepted, mode="append", idempotency_token=token
     )
@@ -128,8 +149,7 @@ def ingest_batch_with_dedup(
             mode="append",
             idempotency_token=token,
         )
-    n_bad = bad.count()
-    return {"accepted": batch.count() - n_bad, "rejected": n_bad}
+    return {"accepted": n_acc, "rejected": n - n_acc}
 
 
 def stream_ingest_with_dedup(

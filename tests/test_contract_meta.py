@@ -104,3 +104,22 @@ def test_bench_final_line_stays_tail_parseable(tmp_path, capsys):
     assert detail["queries_median"] == out["queries_median"]
     assert detail["host"] == out["host"]
     assert detail["protocol"]["agg"] == out["agg"]
+
+
+def test_bench_split_spec_rejects_events_and_malformed_entries(monkeypatch):
+    """SPARK_GRAFT_BENCH_SPLIT_TABLES: splitting events would break the
+    streaming rows (its file count is their trigger schedule), and a
+    malformed entry is named in the error instead of failing unpacking."""
+    import pytest
+
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_SPLIT_TABLES", "lineitem=32, orders=8")
+    assert bench._split_spec() == {"lineitem": 32, "orders": 8}
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_SPLIT_TABLES", "lineitem=8,events=4")
+    with pytest.raises(ValueError, match="cannot split events"):
+        bench._split_spec()
+    for bad in ("lineitem", "lineitem=8=2", "=4", "orders=x"):
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_SPLIT_TABLES", f"part=2,{bad}")
+        with pytest.raises(ValueError, match=f"entry '{bad}' is not table=n"):
+            bench._split_spec()

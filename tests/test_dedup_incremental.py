@@ -118,6 +118,33 @@ def test_incremental_equals_full_restricted_to_batch(
     assert (104, 201) in found2       # batch2 → batch1 (cross-batch)
 
 
+def test_incremental_replay_over_indexed_batch_docs(
+    spark, tmp_path, corpus_and_batches
+):
+    """A batch whose docs are partly in the index already — the state a
+    crashed ingest epoch leaves after its index append — still yields
+    exactly the full-corpus pairs touching the batch: the doc_ids shared
+    by batch and index are one document (no self pair), and a pair
+    reached from both the index side and the batch side is emitted once."""
+    corpus_df, b1_df, _b2, corpus, b1, _r2 = corpus_and_batches
+    idx = str(tmp_path / "index")
+    build_neardup_index(spark, corpus_df, idx)
+    # 100 (dup of corpus 7) and 102/103 (batch-internal dup) land in the
+    # index before the batch is probed again
+    append_to_neardup_index(
+        spark, b1_df.filter("doc_id < 105"), idx, idempotency_token="b1"
+    )
+    rows = [
+        (r["doc_a"], r["doc_b"], r["jaccard"])
+        for r in minhash_neardup_incremental(spark, b1_df, idx).collect()
+    ]
+    assert len(rows) == len(set(rows))
+    assert all(a < b for a, b, _ in rows)
+    assert set(rows) == _full_pairs_touching(spark, corpus + b1, {i for i, _ in b1})
+    found = {(a, b) for a, b, _ in rows}
+    assert (7, 100) in found and (102, 103) in found
+
+
 def test_append_is_idempotent_under_token_replay(
     spark, tmp_path, corpus_and_batches
 ):

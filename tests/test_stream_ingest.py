@@ -198,3 +198,36 @@ def test_batch_with_duplicate_ids_fails_before_commit(spark, tmp_path):
     with _pytest.raises(ValueError, match="duplicate doc_id 100"):
         ingest_batch_with_dedup(bad, idx, cor, 1)
     assert VersionedTable(spark, idx).versions() == vers  # untouched
+
+
+#: Spark jobs one small `ingest_batch_with_dedup` epoch may run; the
+#: gate computes each batch-sized frame once and scans the index once
+EPOCH_JOB_BUDGET = 26
+
+
+def test_batch_gate_job_budget(spark, tmp_path):
+    corpus, idx, cor = _bootstrap(spark, tmp_path)
+    batch = _docs(spark, [
+        (100, _text(7, "zz1")), (101, _text(101)), (102, _text(101, "zz2")),
+    ])
+    sc = spark.sparkContext
+    group = "test-ingest-epoch-budget"
+    sc.setJobGroup(group, "one ingest epoch")
+    try:
+        r = ingest_batch_with_dedup(batch, idx, cor, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r == {"accepted": 1, "rejected": 2}
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= EPOCH_JOB_BUDGET, jobs
+
+
+def test_empty_batch_touches_no_table(spark, tmp_path):
+    corpus, idx, cor = _bootstrap(spark, tmp_path)
+    vers = [VersionedTable(spark, p).versions() for p in (idx, cor)]
+    empty = _docs(spark, [])
+    assert ingest_batch_with_dedup(empty, idx, cor, 1) == {
+        "accepted": 0, "rejected": 0}
+    assert [VersionedTable(spark, p).versions() for p in (idx, cor)] == vers
