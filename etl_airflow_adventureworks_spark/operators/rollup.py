@@ -1060,31 +1060,24 @@ def _rollup_touched_read(
     group (r15): the CoW refresh's last O(rollup) term was the full
     ``roll.read()`` scan feeding the touched-groups semi-join — but a
     touched group's current row can only live in a file whose recorded
-    dim stats admit its key, the same candidacy ``merge_keyed`` uses
-    for its write-side probe (exact bisect under the collect cap, the
-    distributed bounds range-join above it; files without stats stay
-    candidates). The semi-join downstream keeps exactness; this only
+    dim stats admit its key — ``VersionedTable._candidate_files``, the
+    one candidacy rule ``merge_keyed`` also uses for its write-side
+    probe (exact per key at any touched-group count; files without
+    stats stay candidates). The semi-join downstream keeps exactness; this only
     shrinks the READ. On a dims-clustered rollup the whole refresh is
     then touched-sized: read ∝ touched files, write ∝ touched files.
     Returns ``(df, n_candidates, n_files)`` — the counts feed the
     "auto" CoW spread-window stand-down
     (``COW_AUTO_MAX_CANDIDATE_FRACTION``)."""
-    from pyspark.sql import types as T
+    import json as _json
 
-    from ..table import _PRUNE_KEYS_COLLECT_MAX
+    from pyspark.sql import types as T
 
     man = roll.manifest()
     files = man["files"]
-    stats = man.get("stats") or {}
-    import json as _json
-
     schema = T.StructType.fromJson(_json.loads(man["schema"]))
-    key_rows = touched.limit(_PRUNE_KEYS_COLLECT_MAX + 1).collect()
-    if len(key_rows) > _PRUNE_KEYS_COLLECT_MAX:
-        key_rows = None
-    cand = roll._candidate_files_multi(
-        files, stats, list(touched.columns), key_rows, schema,
-        touch_keys=touched,
+    cand = roll._candidate_files(
+        files, man.get("stats") or {}, list(touched.columns), touched, schema
     )
     if not cand:
         return spark.createDataFrame([], schema), 0, len(files)

@@ -294,6 +294,14 @@ def _ivf_layout_frame(
             "int"
         ),
     )
+    return _with_layout_extras(df, extra_cols)
+
+
+def _with_layout_extras(
+    df: DataFrame, extra_cols: dict[str, str] | None
+) -> DataFrame:
+    """``df`` plus the ``extra_cols`` of ``_ivf_layout_frame`` (staging
+    columns evaluated in order, then dropped)."""
     for name, expr in (extra_cols or {}).items():
         df = df.withColumn(name, F.expr(expr))
     return df.drop(*[n for n in (extra_cols or {}) if n.startswith("__")])
@@ -738,13 +746,16 @@ def _write_ivf_layout_vt(
         if embeddings is not None
         else load_table(spark, sf_dir, "embeddings")
     )
-    df = _ivf_layout_frame(spark, sf_dir, centroids, extra_cols,
-                           embeddings=src)
+    df = _ivf_layout_frame(spark, sf_dir, centroids, embeddings=src)
     total = sum_file_bytes(spark, src.inputFiles())
     n_files = max(k_cells or 1, math.ceil(total / target_file_bytes))
-    clustered = df.repartitionByRange(
-        n_files, "cell", "vec_id"
-    ).sortWithinPartitions("cell", "vec_id")
+    # the extras (PQ codes) are derived after the range shuffle, so the
+    # shuffle's bound-sampling pass does not run the per-vector encode
+    clustered = _with_layout_extras(
+        df.repartitionByRange(n_files, "cell", "vec_id")
+        .sortWithinPartitions("cell", "vec_id"),
+        extra_cols,
+    )
     return VersionedTable(spark, layout_path).commit(
         clustered, mode="overwrite", stats_cols=["cell", "vec_id"]
     )
@@ -1110,8 +1121,13 @@ def sync_ivf_index(
                 if residual
                 else to_double_array("embedding")
             )
-            assigned = assigned.withColumn(
-                "codes", F.expr(pq_code_expr(src, books))
+            # staged as its own column, as the build does: inlined, the
+            # source (with the centroid literal) is repeated once per
+            # (subspace x code) dot fold of the code expression
+            assigned = (
+                assigned.withColumn("__src", F.expr(src))
+                .withColumn("codes", F.expr(pq_code_expr("__src", books)))
+                .drop("__src")
             )
         # delete rows carry NULL payloads typed from the layout schema
         dead = final.filter(F.col("op") == "delete").select("vec_id")

@@ -99,6 +99,9 @@ def _write_day_files(df, t0, staging, n_days):
     import os
     import shutil
 
+    # materialized once: a frame built from a local list re-runs the
+    # Python row conversion on every action, in ONE task under coalesce(1)
+    df = df.localCheckpoint()
     paths = []
     for d in range(n_days + 1):
         day0 = t0 + dt.timedelta(days=d)

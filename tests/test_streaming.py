@@ -187,7 +187,10 @@ def _daily_corpus_df(
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
     )
-    return spark.createDataFrame(rows, schema), t0
+    # materialized once: a frame built from a local list re-runs the
+    # Python row conversion on every action, in ONE task under the
+    # callers' per-day coalesce(1)
+    return spark.createDataFrame(rows, schema).localCheckpoint(), t0
 
 
 def _write_daily_corpus(

@@ -668,14 +668,14 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
     assert pruned.count() == 51
 
 
-def test_big_batch_pruning_falls_back_to_range_overlap(
+def test_big_batch_pruning_is_exact_above_collect_cap(
     spark, tmp_path, monkeypatch
 ):
-    """r11: a batch above the key-collect cap prunes with whole-batch
-    [min, max] overlap — coarser (the mixed low+high batch now admits
-    every in-range file as a candidate) but never wrong: the semi-join
-    probe still finds the single truly-touched file and the merge stays
-    row-exact."""
+    """A batch above the key-collect cap prunes through the distributed
+    bounds join — exact per key, so the mixed low+high batch probes only
+    the one file its low keys overlap (the high keys lie past every
+    file), not every file in the batch's [min, max] range; the merge
+    stays row-exact."""
     import etl_airflow_adventureworks_spark.table as tbl
     from pyspark.sql import functions as F
 
@@ -693,8 +693,9 @@ def test_big_batch_pruning_falls_back_to_range_overlap(
     )
     v = t.upsert(batch, key="k")
     op = t.manifest(v)["op"]
-    # coarse range [2000, 90004] overlaps the files covering 2000..7999
-    assert op["files_probed"] >= 6, op
+    # a whole-batch range [2000, 90004] would overlap the 6 files
+    # covering 2000..7999; per-key candidacy keeps only 2000..2009's file
+    assert op["files_probed"] == 1, op
     assert op["files_rewritten"] == 1 and op["rows_matched"] == 10, op
     got = t.read()
     assert got.count() == 8_005
@@ -738,11 +739,13 @@ def test_float_stat_widening_is_conservative(spark, tmp_path):
     # a legacy (float) stats entry whose true min was 2^53 + 1 but got
     # recorded as the rounded 2^53 + 2
     stats = {"data/f1": {"k": [float(2 ** 53 + 2), float(2 ** 53 + 40)]}}
-    assert t._candidate_files(["data/f1"], stats, "k", batch) == ["data/f1"]
+    assert t._candidate_files(
+        ["data/f1"], stats, ["k"], batch, batch.schema) == ["data/f1"]
     # genuinely-out-of-range keys still prune (widening is ~1 ulp, not a
     # blanket keep)
     far = spark.createDataFrame([(2 ** 52,)], "k long")
-    assert t._candidate_files(["data/f1"], stats, "k", far) == []
+    assert t._candidate_files(
+        ["data/f1"], stats, ["k"], far, far.schema) == []
 
 
 def test_insert_only_upsert_keeps_change_feed_alive(spark, tmp_path):
@@ -852,6 +855,45 @@ def test_apply_cdc_atomic_upserts_plus_deletes(spark, tmp_path):
     with pytest.raises(ValueError, match="no op column"):
         t.apply_cdc(spark.createDataFrame([(1, 1)], "k long, v long"), key="k")
     assert t.versions() == [1, 2]  # nothing published by the failures
+
+
+def test_apply_cdc_rejects_null_key_and_null_op(spark, tmp_path):
+    """A NULL-keyed CDC row names no row: rejected with its own message
+    (not "multiple rows per key" — count_distinct skips NULLs), before
+    anything is written. A NULL op is an op outside {upsert, delete}
+    (not a silent delete of the row its key names)."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(_df(spark, [(1, "a"), (2, "b")]), stats_cols=["k"])
+    batch = spark.createDataFrame([("upsert", None, "z")],
+                                  "op string, k long, v string")
+    with pytest.raises(ValueError, match=r"1 row\(s\) with a NULL key 'k'"):
+        t.apply_cdc(batch, key="k")
+    mixed = spark.createDataFrame(
+        [("upsert", 3, "c"), ("delete", None, None), ("upsert", None, "z")],
+        "op string, k long, v string",
+    )
+    with pytest.raises(ValueError, match=r"2 row\(s\) with a NULL key"):
+        t.apply_cdc(mixed, key="k")
+    null_op = spark.createDataFrame([(None, 1, "z")],
+                                    "op string, k long, v string")
+    with pytest.raises(ValueError, match=r"1 row\(s\) with op outside"):
+        t.apply_cdc(null_op, key="k")
+    assert t.versions() == [1]
+
+
+def test_upsert_null_key_never_matches(spark, tmp_path):
+    """upsert's key follows SQL join NULL semantics: a NULL-keyed batch
+    row matches nothing, so upserting it twice leaves both copies next
+    to the untouched rows (a null-safe probe would replace the first)."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(_df(spark, [(1, "a"), (2, "b")]), stats_cols=["k"])
+    t.upsert(_df(spark, [(None, "n1")]), key="k")
+    v = t.upsert(_df(spark, [(None, "n2")]), key="k")
+    op = t.manifest(v)["op"]
+    assert op["rows_matched"] == 0 and op["files_rewritten"] == 0, op
+    assert sorted(map(tuple, t.read().collect()),
+                  key=lambda r: (r[0] is None, r)) == [
+        (1, "a"), (2, "b"), (None, "n1"), (None, "n2")]
 
 
 def test_stream_cdc_exactly_once(spark, tmp_path):

@@ -6,7 +6,8 @@ key-clustered table of N rows takes a micro-batch of 1,000 updates +
 reads the WHOLE table, scd1-merges, and rewrites every row; the
 copy-on-write path probes for the files containing matched keys and
 rewrites only those. Both must produce byte-identical tables (asserted
-by checksum).
+by checksum; each shape's checksum is printed, so runs of two revisions
+can be compared too).
 
 Two batch shapes, because the pruning win depends on key locality:
   - clustered: all update keys fall in one file's key range (the design
@@ -129,6 +130,7 @@ def main() -> None:
             "speedup": round(times["full"] / times["cow"], 2),
             "files_rewritten": op["files_rewritten"],
             "files_carried": op["files_carried"],
+            "checksum": chk_cow,
         }
     print(json.dumps(out))
     spark.stop()
