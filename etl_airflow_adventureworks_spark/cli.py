@@ -18,6 +18,15 @@ import argparse
 import sys
 
 
+def _print_maintenance(what: str, rep: dict, detail: str = "") -> None:
+    """The maintain-* subcommands' report: the plan (or what ran) and
+    one line per reason."""
+    verb = "would run" if rep["dry_run"] else "ran"
+    print(f"{what}: {verb} {rep['actions'] or ['nothing']}{detail}")
+    for r in rep["reasons"]:
+        print(f"  - {r}")
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="etl_airflow_adventureworks_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -347,12 +356,10 @@ def main(argv: list[str] | None = None) -> int:
 
     mi = sub.add_parser(
         "maintain-index",
-        help="one-call maintenance policy for a versioned-base index "
-        "(r12): reads the staleness probes and picks no-op / sync / "
-        "compact / rebuild-refit from the measured SCALING.md decision "
-        "table (corpus size, count drift, layout fragmentation); "
-        "--dry-run prints the chosen actions and why without touching "
-        "anything",
+        help="run the maintenance planner on a versioned-base index: "
+        "no-op / sync / rebuild-refit, then compact and vacuum "
+        "(SCALING.md \"Maintenance policy\"); --dry-run prints the plan "
+        "and why",
     )
     mi.add_argument("--index", required=True)
     mi.add_argument("--kind", choices=["ivf", "dedup"], required=True)
@@ -360,11 +367,9 @@ def main(argv: list[str] | None = None) -> int:
     mi.add_argument("--token", default=None,
                     help="idempotency token forwarded to a sync action")
     mi.add_argument("--vacuum-retain", type=int, default=None, metavar="N",
-                    help="after the content/compact actions, sweep index "
-                    "storage to the newest N versions (dedup: the index "
-                    "table's versions; ivf: centroid versions + "
-                    "unreferenced layout dirs past the in-flight-build "
-                    "age window + the layout's sync-patch versions)")
+                    help="finally sweep index storage to the newest N "
+                    "versions (ivf: centroid versions + unreferenced "
+                    "layout dirs)")
     mi.add_argument("--check-fit-drift", action="store_true",
                     help="(ivf only) also probe quantizer FIT drift — one "
                     "column-pruned pass over the base table; refits when "
@@ -430,12 +435,9 @@ def main(argv: list[str] | None = None) -> int:
 
     mr = sub.add_parser(
         "maintain-rollup",
-        help="one-call maintenance policy for a rollup (r13): classify "
-        "the refresh window from manifests alone and run the right verb "
-        "— rebuild below the measured size crossovers (or across an "
-        "unrecorded rewrite), incremental / group-local refresh above "
-        "them; --dry-run prints the plan and why without touching "
-        "anything",
+        help="run the maintenance planner on a rollup: rebuild or "
+        "refresh by the measured crossovers, then compact its own "
+        "layout and vacuum; --dry-run prints the plan and why",
     )
     mr.add_argument("--source", required=True,
                     help="source VersionedTable root")
@@ -453,18 +455,15 @@ def main(argv: list[str] | None = None) -> int:
                     help="copy-on-write commit for the refresh leg "
                     "(r15, see refresh-rollup --cow)")
     mr.add_argument("--no-layout", action="store_true",
-                    help="skip the rollup's own layout-health leg "
-                    "(maintain_table probe + compaction, r15)")
+                    help="skip the layout probe + compaction of the "
+                    "rollup's own table")
 
     mt = sub.add_parser(
         "maintain-table",
-        help="one-call maintenance policy for a plain VersionedTable "
-        "(r15) — the generic peer of maintain-rollup/maintain-index: "
-        "manifest-only probes (clustered-layout overlap depth, "
-        "small-file fraction) decide whether to compact; the clustering "
-        "spec is read back from the newest optimize commit unless "
-        "overridden; --vacuum-retain adds the consumer-aware retention "
-        "sweep",
+        help="run the maintenance planner on a plain VersionedTable: "
+        "compact when fragmented or small-filed (re-clustering with the "
+        "spec the newest optimize recorded unless overridden), then "
+        "vacuum honoring consumers; --dry-run prints the plan and why",
     )
     mt.add_argument("--table", required=True, help="VersionedTable root")
     mt.add_argument("--cluster-by", default=None,
@@ -590,6 +589,15 @@ def main(argv: list[str] | None = None) -> int:
         for name in sorted(QUERIES):
             print(name)
         return 0
+
+    # the maintain-* argument checks refuse before any Spark work
+    if getattr(args, "vacuum_retain", None) is not None \
+            and args.vacuum_retain < 1:
+        print("--vacuum-retain must be >= 1")
+        return 2
+    if getattr(args, "check_fit_drift", False) and args.kind != "ivf":
+        print("--check-fit-drift applies to --kind ivf only")
+        return 2
 
     from .session import get_spark
 
@@ -1002,24 +1010,11 @@ def main(argv: list[str] | None = None) -> int:
                 maintain_neardup_index as _mt,
             )
         kw = {"idempotency_token": args.token} if args.token else {}
-        if args.vacuum_retain is not None:
-            if args.vacuum_retain < 1:
-                # fail at arg-parse time, before any Spark work — the
-                # policies re-validate up front too (ADVICE r12)
-                print("--vacuum-retain must be >= 1")
-                return 2
-            kw["vacuum_retain_last"] = args.vacuum_retain
-        if args.kind == "ivf" and args.check_fit_drift:
+        if args.check_fit_drift:
             kw["check_fit_drift"] = True
-        elif args.check_fit_drift:
-            print("--check-fit-drift applies to --kind ivf only")
-            return 2
-        rep = _mt(spark, args.index, dry_run=args.dry_run, **kw)
-        verb = "would run" if args.dry_run else "ran"
-        print(f"{args.kind} index {args.index}: {verb} "
-              f"{rep['actions'] or ['nothing']}")
-        for r in rep["reasons"]:
-            print(f"  - {r}")
+        rep = _mt(spark, args.index, dry_run=args.dry_run,
+                  vacuum_retain_last=args.vacuum_retain, **kw)
+        _print_maintenance(f"{args.kind} index {args.index}", rep)
         return 0
     if args.cmd == "index-staleness":
         if args.kind == "ivf":
@@ -1079,9 +1074,6 @@ def main(argv: list[str] | None = None) -> int:
 
         from .operators.rollup import maintain_rollup
 
-        if args.vacuum_retain is not None and args.vacuum_retain < 1:
-            print("--vacuum-retain must be >= 1")
-            return 2
         with open(args.spec) as fh:
             spec = _json.load(fh)
         measures = {k: (v[0], v[1]) for k, v in spec["measures"].items()}
@@ -1093,11 +1085,8 @@ def main(argv: list[str] | None = None) -> int:
             cow={"auto": "auto", "true": True, "false": False}[args.cow],
             maintain_layout=not args.no_layout,
         )
-        verb = "would run" if args.dry_run else "ran"
-        print(f"rollup {args.rollup}: {verb} "
-              f"{rep['actions'] or ['nothing']} (mode {rep['mode']})")
-        for r in rep["reasons"]:
-            print(f"  - {r}")
+        _print_maintenance(f"rollup {args.rollup}", rep,
+                           f" (mode {rep['mode']})")
         return 0
     if args.cmd == "maintain-table":
         from .table import maintain_table
@@ -1110,12 +1099,11 @@ def main(argv: list[str] | None = None) -> int:
             dry_run=args.dry_run,
             vacuum_retain_last=args.vacuum_retain,
         )
-        verb = "would run" if args.dry_run else "ran"
-        print(f"table {args.table}: {verb} {rep['actions'] or ['nothing']}"
-              f" (depth {rep['frag_depth']}/{rep['frag_floor']}, "
-              f"{rep['small_files']}/{rep['files']} small files)")
-        for r in rep["reasons"]:
-            print(f"  - {r}")
+        _print_maintenance(
+            f"table {args.table}", rep,
+            f" (depth {rep['frag_depth']}/{rep['frag_floor']}, "
+            f"{rep['small_files']}/{rep['files']} small files)",
+        )
         return 0
     if args.cmd == "verify-replica":
         import json as _json

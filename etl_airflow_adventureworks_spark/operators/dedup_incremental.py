@@ -36,7 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..table import VersionedTable
+from ..table import (
+    FRAG_DEPTH_MAX,
+    Maintained,
+    VersionedTable,
+    files_for_bytes,
+    maintain,
+)
 from .dedup import (
     JACCARD_THRESHOLD,
     _MERSENNE_P,
@@ -157,10 +163,6 @@ def build_neardup_index(
     return v
 
 
-#: target bytes per appended index file — the same sizing rule as
-#: `optimize` / `_write_ivf_layout_vt`
-_APPEND_TARGET_FILE_BYTES = 128 * 1024 * 1024
-
 #: estimated stored-entry bytes per byte of document TEXT: `hh` holds
 #: one 8-byte hash per distinct 3-token shingle (≈ one per ~5-char
 #: token), so entry bytes track text bytes at roughly 8/5 = 1.6×
@@ -176,20 +178,17 @@ _ENTRY_FIXED_BYTES = 384
 def _num_files_for(rows: int, text_bytes: int) -> int:
     """Output file count for an append of ``rows`` documents holding
     ``text_bytes`` of text: the estimated stored entry bytes (shingle-hash
-    arrays scale with document text) over the 128 MiB file target,
-    rounded up — so a LARGE batch lands as several key-local files
+    arrays scale with document text) through ``table.files_for_bytes`` —
+    so a LARGE batch lands as several key-local files
     instead of one oversized file spanning the whole batch key range
     (which every later copy-on-write sync would rewrite wholesale,
     ADVICE r11). The one sizing rule of both callers: `_batch_num_files`
     and the ingest gate, which reads the two numbers off the accepted
     frame's own count aggregation."""
-    import math
-
-    entry_bytes = (
+    return files_for_bytes(
         rows * _ENTRY_FIXED_BYTES
         + int(text_bytes * _ENTRY_BYTES_PER_TEXT_BYTE)
     )
-    return max(1, math.ceil(entry_bytes / _APPEND_TARGET_FILE_BYTES))
 
 
 def _batch_num_files(spark: SparkSession, docs: DataFrame) -> int:
@@ -418,11 +417,65 @@ def sync_neardup_index(
 #: re-shingle-everything term has grown with the corpus)
 MAINTAIN_REBUILD_BELOW_BYTES = 16 * 1024 * 1024
 
-#: key-range overlap depth (`table.stats_overlap_depth`) above which
-#: the maintain policy re-clusters the layout: a fresh build is ~1
-#: (disjoint file ranges), each range-spanning sync patch adds ~1, and
-#: every extra unit is one more file EVERY future probe must open
-MAINTAIN_FRAG_DEPTH_MAX = 2
+
+class _NeardupIndex(Maintained):
+    """A versioned-base dedup index under ``table.maintain``: layout
+    table = the index, cluster key ``doc_id``, compact =
+    ``optimize(cluster_by=["doc_id"])``, vacuum = the index table's own
+    version sweep (a derived artifact: its history has no consumers)."""
+
+    what = "index"
+
+    def __init__(self, spark, index_path, rebuild_below_bytes,
+                 idempotency_token):
+        self.spark, self.path = spark, index_path
+        self.idx = VersionedTable(spark, index_path)
+        self.rebuild_below_bytes = rebuild_below_bytes
+        self.token = idempotency_token
+        self.kind = None
+
+    def classify(self, dry_run):
+        st = neardup_index_staleness(self.spark, self.path,
+                                     allow_rewritten=True)
+        self.kind, self.base_path = st["kind"], st["base_path"]
+        self.corpus = VersionedTable(self.spark, st["base_path"])
+        below = self.rebuild_below_bytes
+        if st["kind"] == "unchanged":
+            return None, [
+                f"base unchanged since v{st['synced_at_base_version']} — "
+                "no content action"
+            ]
+        if self.corpus.visible_bytes(stop_at=below) < below:
+            return "rebuild", [
+                f"base {st['kind']} and corpus < {below >> 20} MiB — "
+                "re-shingling a small corpus beats sync's fixed job "
+                "chain (SCALING.md: 0.6-0.8x at 50k docs)"
+            ]
+        return "sync", [
+            f"base {st['kind']} and corpus >= {below >> 20} MiB — sync at "
+            "change-feed cost (SCALING.md: 3.5-3.9x over rebuild at 500k "
+            "docs)"
+        ]
+
+    def run(self, action):
+        if action == "rebuild":
+            v_now = self.corpus.manifest()["version"]
+            build_neardup_index(
+                self.spark, self.corpus.read(v_now), self.path,
+                base_path=self.base_path, base_version=v_now,
+            )
+        else:
+            sync_neardup_index(self.spark, self.path,
+                               idempotency_token=self.token)
+
+    def layout(self):
+        return self.idx, "doc_id"
+
+    def compact(self):
+        self.idx.optimize(cluster_by=["doc_id"])
+
+    def vacuum(self, retain_last):
+        return self.idx.vacuum(retain_last=retain_last)
 
 
 def maintain_neardup_index(
@@ -430,148 +483,36 @@ def maintain_neardup_index(
     index_path: str,
     dry_run: bool = False,
     rebuild_below_bytes: int = MAINTAIN_REBUILD_BELOW_BYTES,
-    frag_depth_max: int = MAINTAIN_FRAG_DEPTH_MAX,
+    frag_depth_max: int = FRAG_DEPTH_MAX,
     idempotency_token: str | None = None,
     vacuum_retain_last: int | None = None,
 ) -> dict:
-    """ONE maintenance call for a versioned-base dedup index (r12,
-    VERDICT r11 #5): read the staleness probes and pick — then run —
-    the right verb, encoding SCALING.md's measured decision table
-    ("Dedup-index sync vs rebuild") instead of leaving the choice to
-    the operator:
+    """``table.maintain`` for a versioned-base dedup index, with the
+    measured SCALING.md decision table ("Dedup-index sync vs rebuild")
+    as its content classifier:
 
     - base ``unchanged`` since the sync point → no content action;
-    - base ``appended``/``rewritten`` and the corpus is SMALL
-      (``rebuild_below_bytes``, default 16 MiB ≈ the measured ~50k-doc
+    - base ``appended``/``rewritten`` and the corpus is under
+      ``rebuild_below_bytes`` (default 16 MiB ≈ the measured ~50k-doc
       regime where rebuild wins 0.6–0.8×) → ``build_neardup_index``
       from the current snapshot;
     - otherwise → ``sync_neardup_index`` (change-feed cost; 3.5–3.9×
-      faster than rebuild at 500k docs);
-    - afterwards, if the layout's doc_id overlap depth exceeds
-      ``max(frag_depth_max, baseline)`` — where baseline is the depth
-      at the last retained clustering (``table.
-      clustered_baseline_depth``): growth above it is reducible patch
-      fragmentation, the degradation VERDICT r11 flagged — re-cluster
-      with ``optimize(cluster_by=["doc_id"])``; skipped when no file
-      has doc_id stats (non-numeric keys: nothing prunes either way)
-      and after a rebuild (already freshly clustered).
+      faster than rebuild at 500k docs).
 
-    ``vacuum_retain_last`` (optional) completes the lifecycle: after
-    the content/compact actions, sweep the index table's own internal
-    versions to the newest N (sync patches and compactions accumulate
-    them; the index is a derived artifact, so its history has no
-    consumers of its own to strand — time travel of the index itself is
-    the only thing the knob trades).
-
-    ``dry_run=True`` returns the PLAN (actions + reasons) without
-    touching anything; the executed report re-probes fragmentation
-    AFTER the content action (a scattered sync adds the very patch
-    file the probe measures), so a real run may compact where the plan
-    did not. Returns ``{"actions", "reasons", "kind", "frag_depth",
+    The layout leg re-clusters on ``doc_id`` (skipped when no file has
+    doc_id stats: non-numeric keys prune nothing either way). Returns
+    ``{"actions", "reasons", "kind", "frag_depth", "frag_floor",
     "dry_run"[, "index_version"]}``."""
-    from ..table import clustered_baseline_depth, stats_overlap_depth
-
-    if vacuum_retain_last is not None and vacuum_retain_last < 1:
-        # validate the retention leg BEFORE any content action runs —
-        # surfacing this from vacuum() after a sync/rebuild already
-        # executed would lose the report of what ran (ADVICE r12)
-        raise ValueError(
-            "vacuum_retain_last must be >= 1 (or None to skip the "
-            f"retention leg), got {vacuum_retain_last}"
-        )
-    idx = VersionedTable(spark, index_path)
-    st = neardup_index_staleness(spark, index_path, allow_rewritten=True)
-    corpus = VersionedTable(spark, st["base_path"])
-    plan: list[str] = []
-    reasons: list[str] = []
-    if st["kind"] == "unchanged":
-        reasons.append(
-            f"base unchanged since v{st['synced_at_base_version']} — "
-            "no content action"
-        )
-    elif corpus.visible_bytes(stop_at=rebuild_below_bytes) < rebuild_below_bytes:
-        plan.append("rebuild")
-        reasons.append(
-            f"base {st['kind']} and corpus < "
-            f"{rebuild_below_bytes >> 20} MiB — re-shingling a small "
-            "corpus beats sync's fixed job chain (SCALING.md: 0.6-0.8x "
-            "at 50k docs)"
-        )
-    else:
-        plan.append("sync")
-        reasons.append(
-            f"base {st['kind']} and corpus >= "
-            f"{rebuild_below_bytes >> 20} MiB — sync at change-feed cost "
-            "(SCALING.md: 3.5-3.9x over rebuild at 500k docs)"
-        )
-
-    def frag_depth() -> int | None:
-        man = idx.manifest()
-        stats = man.get("stats") or {}
-        if not any("doc_id" in (stats.get(f) or {}) for f in man["files"]):
-            return None  # nothing prunes on doc_id; compaction can't help
-        return stats_overlap_depth(man, "doc_id")
-
-    def frag_floor() -> int:
-        # depth at the last retained clustering = the layout's legitimate
-        # shape; growth above max(it, frag_depth_max) is reducible
-        return max(frag_depth_max, clustered_baseline_depth(idx, "doc_id"))
-
-    depth = frag_depth()
-    if dry_run:
-        if "rebuild" not in plan and depth is not None and depth > frag_floor():
-            plan.append("compact")
-            reasons.append(
-                f"layout doc_id overlap depth {depth} > {frag_floor()} "
-                "(max of frag_depth_max and the last clustering's depth) "
-                "— stats pruning degraded; re-cluster"
-            )
-        if vacuum_retain_last is not None:
-            plan.append("vacuum")
-            reasons.append(
-                f"sweep index versions to the newest {vacuum_retain_last}"
-            )
-        return {"actions": plan, "reasons": reasons, "kind": st["kind"],
-                "frag_depth": depth, "frag_floor": frag_floor(),
-                "dry_run": True}
-    actions: list[str] = []
-    for a in plan:
-        if a == "rebuild":
-            v_now = corpus.manifest()["version"]
-            build_neardup_index(
-                spark, corpus.read(v_now), index_path,
-                base_path=st["base_path"], base_version=v_now,
-            )
-        else:
-            sync_neardup_index(
-                spark, index_path, idempotency_token=idempotency_token
-            )
-        actions.append(a)
-    if "rebuild" not in actions:
-        depth = frag_depth()  # re-probe: the sync may have fragmented
-        floor = frag_floor()
-        if depth is not None and depth > floor:
-            idx.optimize(cluster_by=["doc_id"])
-            actions.append("compact")
-            reasons.append(
-                f"post-sync layout doc_id overlap depth {depth} > {floor} "
-                "(max of frag_depth_max and the last clustering's depth) "
-                "— re-clustered"
-            )
-            depth = frag_depth()
-    else:
-        depth = frag_depth()
-    if vacuum_retain_last is not None:
-        deleted = idx.vacuum(retain_last=vacuum_retain_last)
-        actions.append("vacuum")
-        reasons.append(
-            f"swept {deleted} unreferenced file(s), retaining the newest "
-            f"{vacuum_retain_last} index version(s)"
-        )
-    return {"actions": actions, "reasons": reasons, "kind": st["kind"],
-            "frag_depth": depth, "frag_floor": frag_floor(),
-            "dry_run": False,
-            "index_version": idx.manifest()["version"]}
+    art = _NeardupIndex(spark, index_path, rebuild_below_bytes,
+                        idempotency_token)
+    rep = maintain(art, dry_run=dry_run, frag_depth_max=frag_depth_max,
+                   vacuum_retain_last=vacuum_retain_last)
+    out = {"actions": rep["actions"], "reasons": rep["reasons"],
+           "kind": art.kind, "frag_depth": rep["frag_depth"],
+           "frag_floor": rep["frag_floor"], "dry_run": dry_run}
+    if not dry_run:
+        out["index_version"] = art.idx.manifest()["version"]
+    return out
 
 
 def _bands(entries: DataFrame, *carry: str) -> DataFrame:

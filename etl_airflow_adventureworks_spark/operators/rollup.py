@@ -95,7 +95,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..table import VersionedTable
+from ..table import TableLayout, VersionedTable, maintain
 
 #: measure fn -> (per-delta aggregate, merge aggregate); the measured
 #: column is an arbitrary SQL expression (e.g. "length(text)")
@@ -1607,210 +1607,131 @@ def refresh_rollup(
     raise last_err
 
 
-def maintain_rollup(
-    spark: SparkSession,
-    source_path: str,
-    rollup_path: str,
-    dims: list[str],
-    measures: dict[str, tuple[str, str | None]],
-    dry_run: bool = False,
-    rebuild_below_bytes: int = REBUILD_ADVISORY_BYTES,
-    group_local_below_bytes: int = GROUP_LOCAL_ADVISORY_BYTES,
-    monotone_dims: dict[str, str] | None = None,
-    vacuum_retain_last: int | None = None,
-    record_changes: "bool | str" = "auto",
-    cow: "bool | str" = "auto",
-    maintain_layout: bool = True,
-) -> dict:
-    """ONE maintenance call for a rollup (r13, VERDICT r12 #3 — the
-    policy peer of ``maintain_neardup_index`` / ``maintain_ivf_index``):
-    classify the refresh window from manifests alone and pick — then
-    run — the right verb, executing the measured SCALING.md decision
-    table that ``refresh_rollup`` previously only emitted as advisory
-    warnings the caller could ignore:
+class _Rollup(TableLayout):
+    """A rollup under ``table.maintain``: the measured rebuild-vs-refresh
+    decision tree as its classifier, ``refresh_rollup`` as both verbs,
+    and the plain-table layout leg on the ROLLUP's own table (CoW
+    refreshes stack patch files, classic ones land shuffle-many small
+    files). A rebuild here is a plain overwrite, not a clustering, so
+    the layout probe still runs after one."""
 
-    - rollup already reflects the source's latest version → no action;
-    - first refresh (no rollup yet) → rebuild (the bootstrap IS a full
-      aggregate);
-    - the stored rollup predates the hidden per-sum non-null counters
-      (pre-r11 schema) → rebuild once to migrate;
-    - a commit in the window replaced files WITHOUT recording change
-      rows (plain overwrite / pre-r10 history) → rebuild — the verb
-      ``refresh_rollup`` would fail loud on, auto-recovered here with
-      the reason recorded;
-    - a recorded rewrite window on a spec with non-retractable measures
-      (min/max/HLL) or no count measure → the GROUP-LOCAL shape:
-      rebuild below ``group_local_below_bytes`` (the measured ~20M-row
-      crossover where the path's fixed job chain loses to a plain
-      re-aggregate), group-local refresh above it;
-    - otherwise (insert-only, or retractable measures) → rebuild below
-      ``rebuild_below_bytes`` (the measured ~1M-row crossover, r9:
-      0.93x at sf1), incremental refresh above it.
+    what = "rollup"
 
-    ``vacuum_retain_last`` (optional, validated ≥ 1 up front) sweeps
-    the ROLLUP table's own versions after the content action — with
-    ``respect_consumers="auto"`` (r14, ADVICE r13), because a rollup
-    CAN have consumers of its own (e.g. a replica of the rollup, which
-    ``replicate_table`` auto-registers): retention clamps up loudly
-    when one is lagging. ``monotone_dims`` passes through to the
-    group-local path's expression-dim file pruning;
-    ``record_changes`` to the refresh's own change-row recording (r14
-    — "auto" records when the rollup has registered consumers);
-    ``cow`` to the copy-on-write commit path (r15 — "auto" switches to
-    ``merge_keyed`` once the stored rollup exceeds the measured
-    break-even). ``maintain_layout`` (r15, default True) runs the
-    generic ``maintain_table`` probe on the ROLLUP's own file layout
-    after the content action — CoW refreshes are patches, so a
-    long-running CoW rollup accrues range-straddling patch files and
-    classic refreshes land shuffle-many small files; the probe is
-    manifest-only and compacts (re-clustering with the spec a prior
-    ``optimize`` recorded, when there is one) only past the same floors
-    ``maintain_table`` documents, closing the layout-health loop in the
-    same scheduled call. ``dry_run=True``
-    returns the plan + reasons without touching anything; when the
-    predicted mode is ``group_local`` it also runs the manifest-level
-    pruning walk against the CURRENT delta window (change rows + per-
-    file stats, never the source files) and reports ``predicted``
-    ``{files_read, files_total, groups_touched}`` so the policy's cost
-    claim is inspectable before execution (r14, VERDICT r13 #7).
-    Returns ``{"actions", "reasons", "mode", "dry_run"[,
-    "rollup_version", "predicted"]}`` where ``mode`` is the refresh
-    mode the policy predicts (and, on a real run, the mode the
-    committed manifest actually recorded)."""
-    import json as _json
+    def __init__(self, spark, source_path, rollup_path, dims, measures,
+                 rebuild_below_bytes, group_local_below_bytes,
+                 monotone_dims, record_changes, cow, maintain_layout):
+        super().__init__(VersionedTable(spark, rollup_path))
+        self.spark = spark
+        self.src = VersionedTable(spark, source_path)
+        self.dims, self.measures = dims, measures
+        self.rebuild_below_bytes = rebuild_below_bytes
+        self.group_local_below_bytes = group_local_below_bytes
+        self.monotone_dims = monotone_dims
+        self.record_changes, self.cow = record_changes, cow
+        self.maintain_layout = maintain_layout
+        self.mode = self.predicted = None
 
-    if vacuum_retain_last is not None and vacuum_retain_last < 1:
-        raise ValueError(
-            "vacuum_retain_last must be >= 1 (or None to skip the "
-            f"retention leg), got {vacuum_retain_last}"
-        )
-    if record_changes not in (True, False, "auto"):
-        # ADVICE r14: refresh_rollup validates this too, but only when
-        # the policy picks an action — an invalid value on an
-        # already-current rollup would otherwise pass silently here and
-        # explode on a later call; fail at the entry point like
-        # vacuum_retain_last does
-        raise ValueError(
-            f"record_changes must be True, False or 'auto', got "
-            f"{record_changes!r}"
-        )
-    if cow not in (True, False, "auto"):
-        raise ValueError(f"cow must be True, False or 'auto', got {cow!r}")
-    src = VersionedTable(spark, source_path)
-    roll = VersionedTable(spark, rollup_path)
-    src_latest = src.manifest()
-    if src_latest is None:
-        raise FileNotFoundError(f"no committed source at {source_path}")
-    mono_map = _monotone_map(dims, monotone_dims)  # validate loudly
-    v_src = src_latest["version"]
-    reflected = _reflected_version(roll, source_path)  # + source-identity
-    # check (r14, ADVICE r13): a rollup of a DIFFERENT table fails here
+    def classify(self, dry_run):
+        src_latest = self.src.manifest()
+        if src_latest is None:
+            raise FileNotFoundError(f"no committed source at {self.src.path}")
+        mono_map = _monotone_map(self.dims, self.monotone_dims)  # loud
+        v_src = src_latest["version"]
+        # + source-identity check: a rollup of a DIFFERENT table fails
+        reflected = _reflected_version(self.vt, self.src.path)
+        choice, self.mode, reason = self._decide(reflected, v_src)
+        reasons = [reason]
+        if dry_run:
+            reasons += self._predict(reflected, v_src, mono_map, choice)
+        return choice, reasons
 
-    reasons: list[str] = []
-    choice: str | None = None  # "rebuild" | "refresh" | None
-    mode: str | None = None
-    if reflected is not None and reflected >= v_src:
-        reasons.append(
-            f"rollup reflects v{reflected} >= source v{v_src} — current, "
-            "no action"
-        )
-    elif reflected is None:
-        choice, mode = "rebuild", "rebuild"
-        reasons.append("no rollup yet — bootstrap aggregates the full "
-                       "snapshot")
-    elif reflected not in src.versions():
-        # the source history was vacuumed past the rollup's reflected
-        # version (the stranded-consumer case the registry exists to
-        # prevent, on a source that vacuumed without it): the window is
-        # unwalkable, the delta underivable — rebuild from the snapshot
-        # instead of crashing inside the classifier
-        choice, mode = "rebuild", "rebuild"
-        reasons.append(
-            f"source v{reflected} (the rollup's reflected version) was "
-            "vacuumed away — the catch-up window is unreadable; rebuild "
-            "from the current snapshot (size vacuum retention with "
-            'respect_consumers="auto" to avoid this)'
-        )
-    else:
-        internal = _expand_measures(measures)
+    def _decide(self, reflected, v_src) -> tuple:
+        """The decision tree: ``(choice, predicted mode, reason)``."""
+        import json as _json
+
+        src, measures = self.src, self.measures
+        if reflected is not None and reflected >= v_src:
+            return None, None, (
+                f"rollup reflects v{reflected} >= source v{v_src} — "
+                "current, no action"
+            )
+        if reflected is None:
+            return "rebuild", "rebuild", (
+                "no rollup yet — bootstrap aggregates the full snapshot"
+            )
+        if reflected not in src.versions():
+            # the source vacuumed past the reflected version without the
+            # consumer registry: the window is unwalkable
+            return "rebuild", "rebuild", (
+                f"source v{reflected} (the rollup's reflected version) was "
+                "vacuumed away — the catch-up window is unreadable; "
+                "rebuild from the current snapshot (size vacuum retention "
+                'with respect_consumers="auto" to avoid this)'
+            )
         stored_cols = {
             f["name"]
-            for f in _json.loads(roll.manifest()["schema"])["fields"]
+            for f in _json.loads(self.vt.manifest()["schema"])["fields"]
         }
+        if any(c not in stored_cols for c in _expand_measures(measures)):
+            return "rebuild", "rebuild", (
+                "stored rollup predates the per-sum non-null counters "
+                "(pre-r11 schema) — one rebuild migrates it"
+            )
         retractions, unrecorded = _classify_window(src, reflected, v_src)
+        if unrecorded:
+            return "rebuild", "rebuild", (
+                "a commit in the window replaced files without recording "
+                "change rows (plain overwrite / pre-r10 history) — the row "
+                "delta is undefined, rebuild from the snapshot"
+            )
         non_retract = sorted(
             n for n, (fn, _c) in measures.items() if fn not in _RETRACTABLE
         )
         has_count = any(fn == "count" for fn, _c in measures.values())
-        if any(c not in stored_cols for c in internal):
-            choice, mode = "rebuild", "rebuild"
-            reasons.append(
-                "stored rollup predates the per-sum non-null counters "
-                "(pre-r11 schema) — one rebuild migrates it"
-            )
-        elif unrecorded:
-            choice, mode = "rebuild", "rebuild"
-            reasons.append(
-                "a commit in the window replaced files without recording "
-                "change rows (plain overwrite / pre-r10 history) — the "
-                "row delta is undefined, rebuild from the snapshot"
-            )
-        elif retractions and (non_retract or not has_count):
+        if retractions and (non_retract or not has_count):
             why = (f"non-retractable measures {non_retract}" if non_retract
                    else "no count measure")
-            if not dims:
+            gl = self.group_local_below_bytes
+            if not self.dims:
                 # a GLOBAL spec's "group-local" IS the full rebuild
-                # (refresh_rollup's dims guard takes it internally) —
-                # predict what will actually execute
-                choice, mode = "rebuild", "rebuild"
-                reasons.append(
+                return "rebuild", "rebuild", (
                     f"rewrite window with {why} on a GLOBAL spec "
                     "(dims=[]) — one group IS the whole table; rebuild"
                 )
-            elif src.visible_bytes(group_local_below_bytes) \
-                    < group_local_below_bytes:
-                choice, mode = "rebuild", "rebuild"
-                reasons.append(
-                    f"rewrite window with {why} and source < "
-                    f"{group_local_below_bytes >> 20} MiB — below the "
-                    "measured ~20M-row crossover the group-local path's "
-                    "fixed job chain loses to a plain re-aggregate "
-                    "(SCALING.md r12)"
+            if src.visible_bytes(gl) < gl:
+                return "rebuild", "rebuild", (
+                    f"rewrite window with {why} and source < {gl >> 20} "
+                    "MiB — below the measured ~20M-row crossover the "
+                    "group-local path's fixed job chain loses to a plain "
+                    "re-aggregate (SCALING.md r12)"
                 )
-            else:
-                choice, mode = "refresh", "group_local"
-                reasons.append(
-                    f"rewrite window with {why} and source >= "
-                    f"{group_local_below_bytes >> 20} MiB — re-aggregate "
-                    "only the touched groups (stats-pruned, r12/r13)"
-                )
-        elif src.visible_bytes(rebuild_below_bytes) < rebuild_below_bytes:
-            choice, mode = "rebuild", "rebuild"
-            reasons.append(
-                f"source < {rebuild_below_bytes >> 20} MiB — below the "
-                "measured ~1M-row crossover a full rebuild beats the "
-                "incremental merge's fixed costs (SCALING.md r9: 0.93x "
-                "at sf1)"
+            return "refresh", "group_local", (
+                f"rewrite window with {why} and source >= {gl >> 20} MiB "
+                "— re-aggregate only the touched groups (stats-pruned, "
+                "r12/r13)"
             )
-        else:
-            choice, mode = "refresh", "retract" if retractions \
-                else "incremental"
-            reasons.append(
-                f"{'recorded rewrites' if retractions else 'appends only'}"
-                f" in (v{reflected}, v{v_src}] and source >= "
-                f"{rebuild_below_bytes >> 20} MiB — "
-                f"{mode} refresh at delta cost"
+        rb = self.rebuild_below_bytes
+        if src.visible_bytes(rb) < rb:
+            return "rebuild", "rebuild", (
+                f"source < {rb >> 20} MiB — below the measured ~1M-row "
+                "crossover a full rebuild beats the incremental merge's "
+                "fixed costs (SCALING.md r9: 0.93x at sf1)"
             )
+        mode = "retract" if retractions else "incremental"
+        return "refresh", mode, (
+            f"{'recorded rewrites' if retractions else 'appends only'} in "
+            f"(v{reflected}, v{v_src}] and source >= {rb >> 20} MiB — "
+            f"{mode} refresh at delta cost"
+        )
 
-    if dry_run:
-        plan = [choice] if choice else []
-        predicted = None
-        if mode == "group_local":
-            # run the SAME pruning walk the refresh would (r14, VERDICT
-            # r13 #7): touched keys from the delta change rows (delta-
-            # sized, never the source files) mapped against per-file
-            # manifest stats — so the dry-run's cost claim is the
-            # refresh's recorded files_read, inspectable up front
+    def _predict(self, reflected, v_src, mono_map, choice) -> list[str]:
+        """Dry-run cost claims, from the delta change rows and manifest
+        stats only: the group-local pruning walk the refresh would run
+        (files it would read), and the commit shape (CoW or not, and
+        how many rollup files it would touch)."""
+        spark, src, dims, cow = self.spark, self.src, self.dims, self.cow
+        reasons = []
+        if self.mode == "group_local":
             delta = src.row_changes(reflected, v_src)
             dim_tmp = [f"__gl_d{i}" for i in range(len(dims))]
             keys = (
@@ -1826,7 +1747,7 @@ def maintain_rollup(
                 spark, src, v_src, dims, dim_tmp,
                 keys if small else None, mono_map,
             )
-            predicted = {
+            self.predicted = {
                 "files_read": len(pruned),
                 "files_total": len(files),
                 "groups_touched": n_groups,
@@ -1836,12 +1757,6 @@ def maintain_rollup(
                 f"source file(s) for {n_groups} touched group(s)"
             )
         if choice == "refresh" and dims:
-            # predict the COMMIT shape too (r15): would the refresh take
-            # the CoW path, and how many ROLLUP files would it touch?
-            # Same inputs the real decision uses — rollup manifest stats
-            # + the delta's touched keys; no rollup data read (the
-            # pruned-read frame below is constructed lazily and only its
-            # candidate COUNTS are used here)
             touched = (
                 src.row_changes(reflected, v_src)
                 .select(*[F.expr(d) for d in dims])
@@ -1849,22 +1764,21 @@ def maintain_rollup(
                 .localCheckpoint(eager=True)
             )
             will_cow = cow if isinstance(cow, bool) else (
-                roll.visible_bytes(COW_REFRESH_MIN_BYTES)
+                self.vt.visible_bytes(COW_REFRESH_MIN_BYTES)
                 >= COW_REFRESH_MIN_BYTES
             )
             n_cand = n_rfiles = None
             if will_cow:
                 _df, n_cand, n_rfiles = _rollup_touched_read(
-                    spark, roll, touched
+                    spark, self.vt, touched
                 )
                 if cow == "auto" and n_rfiles > 1 and \
                         n_cand > n_rfiles * COW_AUTO_MAX_CANDIDATE_FRACTION:
                     will_cow = False
-            predicted = dict(predicted or {})
-            predicted["cow"] = will_cow
+            self.predicted = dict(self.predicted or {}, cow=will_cow)
             if n_cand is not None:
-                predicted["rollup_files_candidates"] = n_cand
-                predicted["rollup_files_total"] = n_rfiles
+                self.predicted["rollup_files_candidates"] = n_cand
+                self.predicted["rollup_files_total"] = n_rfiles
                 reasons.append(
                     ("CoW commit: rewrite ~" if will_cow
                      else "CoW stands down (spread window): candidates ")
@@ -1875,72 +1789,88 @@ def maintain_rollup(
                     "classic overwrite commit (rollup below "
                     f"{COW_REFRESH_MIN_BYTES >> 20} MiB or cow=False)"
                 )
-        if maintain_layout and roll.manifest() is not None:
-            # layout leg prediction (r15): probes the PRE-refresh
-            # manifest — a refresh that would itself push the layout
-            # past the floor shows up on the NEXT call's plan
-            from ..table import maintain_table
+        return reasons
 
-            lay = maintain_table(spark, rollup_path, dry_run=True)
-            if "compact" in lay["actions"]:
-                plan.append("compact")
-                reasons.extend(f"layout: {r}" for r in lay["reasons"])
-        if vacuum_retain_last is not None:
-            plan.append("vacuum")
-            reasons.append(
-                f"sweep rollup versions to the newest {vacuum_retain_last}"
-            )
-        out = {"actions": plan, "reasons": reasons, "mode": mode,
-               "dry_run": True}
-        if predicted is not None:
-            out["predicted"] = predicted
-        return out
-    actions: list[str] = []
-    if choice:
-        v = refresh_rollup(
-            spark, source_path, rollup_path, dims, measures,
-            full_rebuild=(choice == "rebuild"),
-            rebuild_advisory_bytes=0,  # the policy IS the decision —
-            # the advisories it executes would be noise here
-            monotone_dims=monotone_dims,
-            record_changes=record_changes,
-            cow=cow,
+    def run(self, action):
+        refresh_rollup(
+            self.spark, self.src.path, self.vt.path, self.dims,
+            self.measures,
+            full_rebuild=(action == "rebuild"),
+            rebuild_advisory_bytes=0,  # the policy IS the decision
+            monotone_dims=self.monotone_dims,
+            record_changes=self.record_changes,
+            cow=self.cow,
         )
-        actions.append(choice)
-        # .get("op"): a token-replay / already-current return can land
-        # on a manifest committed WITHOUT op_info (legacy rollup or a
-        # non-refresh writer) — predict-mode stands in (r14, ADVICE r13)
-        mode = (roll.manifest().get("op") or {}).get("mode", mode)
-    else:
-        man = roll.manifest()
-        v = man["version"] if man else None
-    if maintain_layout and roll.manifest() is not None:
-        # layout leg (r15): the rollup's own file layout — CoW patches
-        # stack, classic refreshes land shuffle-many small files; one
-        # manifest-only probe, compaction only past the documented
-        # floors (an at-shape layout is a no-op costing a stats walk)
-        from ..table import maintain_table
+        # .get("op"): a token-replay / already-current return can land on
+        # a manifest committed WITHOUT op_info — the prediction stands in
+        self.mode = (self.vt.manifest().get("op") or {}).get("mode",
+                                                             self.mode)
 
-        lay = maintain_table(spark, rollup_path)
-        if "compact" in lay["actions"]:
-            actions.append("compact")
-            reasons.extend(f"layout: {r}" for r in lay["reasons"])
-            v = roll.manifest()["version"]
-    if vacuum_retain_last is not None:
-        # respect_consumers="auto" (r14, ADVICE r13): the rollup can
-        # have consumers of its OWN (a replica of the rollup
-        # auto-registers since r13) — one cheap registry listing; clamps
-        # only when such a consumer actually exists
-        swept = roll.vacuum(
-            retain_last=vacuum_retain_last, respect_consumers="auto"
+    def layout(self):
+        if not self.maintain_layout or self.vt.manifest() is None:
+            return None, None
+        return super().layout()
+
+
+def maintain_rollup(
+    spark: SparkSession,
+    source_path: str,
+    rollup_path: str,
+    dims: list[str],
+    measures: dict[str, tuple[str, str | None]],
+    dry_run: bool = False,
+    rebuild_below_bytes: int = REBUILD_ADVISORY_BYTES,
+    group_local_below_bytes: int = GROUP_LOCAL_ADVISORY_BYTES,
+    monotone_dims: dict[str, str] | None = None,
+    vacuum_retain_last: int | None = None,
+    record_changes: "bool | str" = "auto",
+    cow: "bool | str" = "auto",
+    maintain_layout: bool = True,
+) -> dict:
+    """``table.maintain`` for a rollup, with the measured SCALING.md
+    decision table as its content classifier (manifest-only):
+
+    - rollup already reflects the source's latest version → no action;
+    - no rollup yet, a pre-r11 stored schema (no per-sum non-null
+      counters), a reflected version vacuumed off the source, or a
+      window commit that replaced files WITHOUT recording change rows
+      → rebuild;
+    - a recorded rewrite window on a spec with non-retractable measures
+      (min/max/HLL) or no count measure → rebuild below
+      ``group_local_below_bytes`` (the measured ~20M-row crossover) or
+      for a global spec, group-local refresh above it;
+    - otherwise → rebuild below ``rebuild_below_bytes`` (the ~1M-row
+      crossover, r9: 0.93x at sf1), incremental / retract refresh above.
+
+    ``monotone_dims``, ``record_changes`` and ``cow`` pass through to
+    ``refresh_rollup``. ``maintain_layout=False`` skips the layout leg
+    (the plain-table probe on the rollup's own table; its reasons are
+    prefixed ``layout:``). The vacuum honors the rollup's own consumers
+    (e.g. a replica of it). A dry run also reports ``predicted``: the
+    group-local files it would read and the CoW commit shape. Returns
+    ``{"actions", "reasons", "mode", "dry_run"[, "rollup_version",
+    "predicted"]}``, ``mode`` being the predicted refresh mode (on a
+    real run, the mode the committed manifest recorded)."""
+    if record_changes not in (True, False, "auto"):
+        raise ValueError(
+            f"record_changes must be True, False or 'auto', got "
+            f"{record_changes!r}"
         )
-        actions.append("vacuum")
-        reasons.append(
-            f"swept {swept} unreferenced file(s), retaining the newest "
-            f"{vacuum_retain_last} rollup version(s)"
-        )
-    return {"actions": actions, "reasons": reasons, "mode": mode,
-            "dry_run": False, "rollup_version": v}
+    if cow not in (True, False, "auto"):
+        raise ValueError(f"cow must be True, False or 'auto', got {cow!r}")
+    art = _Rollup(spark, source_path, rollup_path, dims, measures,
+                  rebuild_below_bytes, group_local_below_bytes,
+                  monotone_dims, record_changes, cow, maintain_layout)
+    rep = maintain(art, dry_run=dry_run,
+                   vacuum_retain_last=vacuum_retain_last)
+    out = {"actions": rep["actions"], "reasons": rep["reasons"],
+           "mode": art.mode, "dry_run": dry_run}
+    if not dry_run:
+        man = art.vt.manifest()
+        out["rollup_version"] = man["version"] if man else None
+    elif art.predicted is not None:
+        out["predicted"] = art.predicted
+    return out
 
 
 def verify_replica(

@@ -23,6 +23,13 @@ from pyspark.sql import functions as F
 from ..functions.vectors import dot, norm, to_double_array
 from ..registry import query
 from ..sources import load_table
+from ..table import (
+    FRAG_DEPTH_MAX,
+    Maintained,
+    VersionedTable,
+    files_for_bytes,
+    maintain,
+)
 
 TOP_K = 5
 N_QUERIES = 3  # query set = vec_id < 3
@@ -581,8 +588,6 @@ def ivf_fit_drift(
     raise — one rebuild migrates them). ``preloaded`` = the
     ``(centroids, meta)`` pair from an earlier ``load_ivf_index``, the
     same convention as ``ann_ivf_topk_from_index``."""
-    from ..table import VersionedTable
-
     cents, meta = preloaded or load_ivf_index(spark, index_path)
     base = meta.get("base")
     if not base:
@@ -641,8 +646,6 @@ def _commit_ivf_index(
     build and a refit cannot drift apart."""
     import json as _json
     import uuid
-
-    from ..table import VersionedTable
 
     layout_dir = f"layout-{uuid.uuid4().hex[:12]}"
     extra = None
@@ -723,7 +726,6 @@ def _write_ivf_layout_vt(
     centroids: list[list[float]],
     extra_cols: dict[str, str] | None = None,
     k_cells: int | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
     embeddings: DataFrame | None = None,
 ) -> int:
     """The repairable layout variant (r11): same columns as
@@ -733,13 +735,11 @@ def _write_ivf_layout_vt(
     ``read_where`` prunes to the cell's files (stats pruning in place
     of directory pruning), and ``sync_ivf_index``'s CDC apply rewrites
     only the files whose (vec_id) range admits the changed vectors.
-    File count = max(k_cells, source bytes / ``target_file_bytes``) —
-    at least one range per cell so probes stay tight, but never files
-    so large that one touched vector's copy-on-write rewrite moves a
-    collection-sized fraction (the same sizing rule as optimize)."""
-    import math
-
-    from ..table import VersionedTable, sum_file_bytes
+    File count = ``files_for_bytes`` of the source floored at
+    ``k_cells`` — at least one range per cell so probes stay tight, but
+    never files so large that one touched vector's copy-on-write
+    rewrite moves a collection-sized fraction."""
+    from ..table import sum_file_bytes
 
     src = (
         embeddings
@@ -748,7 +748,7 @@ def _write_ivf_layout_vt(
     )
     df = _ivf_layout_frame(spark, sf_dir, centroids, embeddings=src)
     total = sum_file_bytes(spark, src.inputFiles())
-    n_files = max(k_cells or 1, math.ceil(total / target_file_bytes))
+    n_files = files_for_bytes(total, floor=k_cells or 1)
     # the extras (PQ codes) are derived after the range shuffle, so the
     # shuffle's bound-sampling pass does not run the per-vector encode
     clustered = _with_layout_extras(
@@ -770,8 +770,6 @@ def load_ivf_index(
     with the centroids; see ``build_ivf_index``). Centroid count is
     k_cells-sized: a driver collect of the index is the serving design,
     not a scale concern."""
-    from ..table import VersionedTable
-
     vt = VersionedTable(spark, f"{index_path}/centroids")
     rows = sorted(vt.read(version).collect(), key=lambda r: r["cell"])
     if not rows:
@@ -822,8 +820,6 @@ def ivf_index_staleness(
     while the base keeps taking appends (exactly the drift this probe
     exists to surface). ``sf_dir`` is only consulted for plain-directory
     builds."""
-    from ..table import VersionedTable
-
     if meta is None:
         _, meta = load_ivf_index(spark, index_path, version)
     base = meta.get("base")
@@ -862,8 +858,6 @@ def ivf_index_rowset_staleness(
     Requires the index to have been built with ``base_path`` — a
     plain-dir build has no manifest history to walk (use the count
     probe). No data is read: one manifest walk, zero scans."""
-    from ..table import VersionedTable
-
     if meta is None:
         _, meta = load_ivf_index(spark, index_path, version)
     base = meta.get("base")
@@ -938,8 +932,6 @@ def _vt_layout_frames(
     recorded cell range admits that cell)."""
     from functools import reduce
 
-    from ..table import VersionedTable
-
     vt = VersionedTable(spark, layout_path)
     cols = ["vec_id", "cell"] + (["codes"] if with_codes else [])
 
@@ -1008,7 +1000,6 @@ def sync_ivf_index(
         CHANGE_TYPE_COL,
         CHANGE_VERSION_COL,
         CommitConflict,
-        VersionedTable,
         collapse_row_changes,
     )
 
@@ -1215,8 +1206,6 @@ def rebuild_ivf_index(
     layout write — both inherent to a refit); the PQ sample is
     limit-bounded and the row count reads parquet footers only.
     Returns the centroid-table version."""
-    from ..table import VersionedTable
-
     cents_old, meta = load_ivf_index(spark, index_path)
     base = meta.get("base")
     if not base:
@@ -1276,8 +1265,6 @@ def optimize_ivf_layout(
     small layout would compact into one all-cells file and every probe
     would scan the whole collection, the opposite of the point. Returns
     the layout table version."""
-    from ..table import VersionedTable
-
     cents, meta = load_ivf_index(spark, index_path)
     if meta.get("layout_kind") != "vt":
         raise ValueError(
@@ -1296,11 +1283,6 @@ def optimize_ivf_layout(
 #: the distribution has drifted (the probe docstring's "0.5 = refit
 #: advised" guidance, encoded)
 MAINTAIN_REFIT_STALENESS = 0.5
-
-#: cell-range overlap depth above which the maintain policy re-clusters
-#: the layout — same contract as dedup_incremental.MAINTAIN_FRAG_DEPTH_MAX
-MAINTAIN_FRAG_DEPTH_MAX = 2
-
 
 #: relative mean-residual inflation (`ivf_fit_drift`) at which the
 #: maintain policy refits when `check_fit_drift=True` — 25% larger mean
@@ -1333,8 +1315,6 @@ def ivf_base_churn_since_fit(spark: SparkSession, meta: dict) -> float | None:
     vacuumed away, or a commit replaced files without metrics) — unknown
     churn must schedule a probe, never silently skip it. Zero data read:
     one manifest walk."""
-    from ..table import VersionedTable
-
     fit = meta.get("fit") or {}
     fv = fit.get("base_version")
     if fv is None or not meta.get("base"):
@@ -1365,235 +1345,171 @@ def ivf_base_churn_since_fit(spark: SparkSession, meta: dict) -> float | None:
     return churn / max(1, int(meta["n_vectors_at_build"]))
 
 
+class _IvfIndex(Maintained):
+    """A versioned-base IVF index under ``table.maintain``: layout table
+    = the current "vt" layout, cluster key ``cell``, compact =
+    ``optimize_ivf_layout``, vacuum = ``vacuum_ivf_index`` (centroid
+    versions, unreferenced layout dirs, the retained layout's patch
+    versions)."""
+
+    what = "centroid"
+    swept_unit = "layout dir(s)"
+
+    def __init__(self, spark, index_path, refit_staleness, token,
+                 check_fit_drift, fit_probe_churn, vacuum_min_age_sec):
+        self.spark, self.path = spark, index_path
+        self.refit_staleness = refit_staleness
+        self.token = token
+        self.check_fit_drift = check_fit_drift
+        self.fit_probe_churn = fit_probe_churn
+        self.min_age_sec = vacuum_min_age_sec
+        self.kind = self.growth = self.fit_drift = self.churn = None
+
+    def classify(self, dry_run):
+        spark, index_path = self.spark, self.path
+        cents, meta = load_ivf_index(spark, index_path)
+        if not meta.get("base"):
+            raise ValueError(
+                f"IVF index at {index_path} was not built with base_path= "
+                "— maintain_ivf_index needs the recorded base sync point"
+            )
+        if meta.get("layout_kind") != "vt":
+            raise ValueError(
+                f"IVF index at {index_path} has an immutable directory "
+                "layout (pre-r11 build) — rebuild with "
+                "build_ivf_index(base_path=...) to get the maintainable "
+                "VersionedTable layout"
+            )
+        self.meta = meta
+        st = ivf_index_rowset_staleness(
+            spark, index_path, meta=meta, allow_rewritten=True
+        )
+        self.kind = st["kind"]
+        growth = self.growth = ivf_index_staleness(
+            spark, index_path, sf_dir=None, meta=meta
+        )
+        refit = self.refit_staleness
+        probe_fit = self.check_fit_drift
+        auto_probed = False
+        if (
+            not probe_fit
+            and self.fit_probe_churn is not None
+            and growth < refit
+            and (meta.get("fit") or {}).get("base_version") is not None
+        ):
+            # the manifest-only churn walk (rewritten rows since the
+            # FIT, the volume the count probe is blind to) schedules the
+            # one data pass; pre-r13 fit records never auto-probe
+            self.churn = ivf_base_churn_since_fit(spark, meta)
+            if self.churn is not None and self.churn >= self.fit_probe_churn:
+                probe_fit = auto_probed = True
+        if probe_fit and growth < refit:
+            # ONE column-pruned data pass — skipped when the free count
+            # probe already mandates the refit
+            self.fit_drift = ivf_fit_drift(
+                spark, index_path, preloaded=(cents, meta)
+            )["rel_drift"]
+        if growth >= refit:
+            return "rebuild", [
+                f"collection moved {growth:.0%} since the quantizer fit "
+                f"(>= {refit:.0%}) — sync cannot move centroids, recall "
+                "decays silently; refit"
+                + (" (fit-drift probe skipped: redundant)"
+                   if self.check_fit_drift else "")
+            ]
+        if self.fit_drift is not None \
+                and self.fit_drift >= MAINTAIN_REFIT_FIT_DRIFT:
+            return "rebuild", [
+                f"mean assigned-centroid distance inflated "
+                f"{self.fit_drift:.0%} since the fit (>= "
+                f"{MAINTAIN_REFIT_FIT_DRIFT:.0%}) with count drift only "
+                f"{growth:.0%} — the upsert-heavy blind spot of the count "
+                "probe; refit"
+                + (f" (probe auto-scheduled: {self.churn:.0%} of the "
+                   "corpus rewritten since the fit)" if auto_probed else "")
+            ]
+        since = f"since v{st['built_at_base_version']} and drift {growth:.0%}"
+        if st["kind"] != "unchanged":
+            return "sync", [
+                f"base {st['kind']} {since} below the refit threshold — "
+                "repair content at change-feed cost (stored quantizer)"
+            ]
+        return None, [
+            f"base unchanged {since} below the refit threshold — no "
+            "content action"
+        ]
+
+    def run(self, action):
+        if action == "rebuild":
+            rebuild_ivf_index(self.spark, self.path)
+            _c, self.meta = load_ivf_index(self.spark, self.path)
+        else:
+            sync_ivf_index(self.spark, self.path,
+                           idempotency_token=self.token)
+
+    def layout(self):
+        return VersionedTable(
+            self.spark, f"{self.path}/{self.meta['layout_dir']}"
+        ), "cell"
+
+    def compact(self):
+        optimize_ivf_layout(self.spark, self.path)
+
+    def vacuum(self, retain_last):
+        return vacuum_ivf_index(self.spark, self.path,
+                                retain_last=retain_last,
+                                min_age_sec=self.min_age_sec)
+
+
 def maintain_ivf_index(
     spark: SparkSession,
     index_path: str,
     dry_run: bool = False,
     refit_staleness: float = MAINTAIN_REFIT_STALENESS,
-    frag_depth_max: int = MAINTAIN_FRAG_DEPTH_MAX,
+    frag_depth_max: int = FRAG_DEPTH_MAX,
     idempotency_token: str | None = None,
     check_fit_drift: bool = False,
-    refit_fit_drift: float = MAINTAIN_REFIT_FIT_DRIFT,
     fit_probe_churn: float | None = MAINTAIN_FIT_PROBE_CHURN,
     vacuum_retain_last: int | None = None,
     vacuum_min_age_sec: int = 3600,
 ) -> dict:
-    """ONE maintenance call for a versioned-base IVF index (r12, VERDICT
-    r11 #5): read both staleness probes and pick — then run — the right
-    lifecycle verb, encoding the SCALING.md decision table ("IVF-index
-    sync", "Dedup-index sync" crossovers) instead of leaving the choice
-    to the operator:
+    """``table.maintain`` for a versioned-base "vt" IVF index, with
+    exactly ONE content action per call (a plan holding both would sync
+    the layout the rebuild just replaced):
 
-    - count-based quantizer drift ≥ ``refit_staleness`` (default 0.5 —
-      the ``ivf_index_staleness`` docstring's refit guidance) →
-      ``rebuild_ivf_index``: sync would keep the index CORRECT but the
-      centroids no longer match the distribution, so recall decays
-      silently; the refit also subsumes any pending content repair;
-    - with ``check_fit_drift=True`` (explicit opt-in) — OR when the
-      manifest-only churn walk ``ivf_base_churn_since_fit`` reads
-      ≥ ``fit_probe_churn`` (default 50%) of the corpus REWRITTEN since
-      the fit (r13, VERDICT r12 #7: the probe is now auto-scheduled by
-      the one signal manifests do carry for upserts, so the blind spot
-      is caught by default; ``fit_probe_churn=None`` disables) —
-      relative mean-residual inflation ≥ ``refit_fit_drift``
-      (``ivf_fit_drift``, default 25%, one column-pruned data pass)
-      → ``rebuild_ivf_index``: the refit signal count growth is BLIND
-      to — an upsert-heavy base mutates vectors without moving the
-      count, so growth reads 0 forever while the fit decays. While
-      churn stays above the threshold with drift below it, each
-      maintenance call re-probes (one pass per call — the honest cost
-      of a corpus that keeps churning); the refit resets both;
-    - else base ``appended``/``rewritten`` since the sync point →
-      ``sync_ivf_index`` (change-feed cost, stored quantizer);
-    - else no content action;
-    - afterwards, if the layout's cell overlap depth
-      (``table.stats_overlap_depth``) exceeds ``max(frag_depth_max,
-      baseline)`` — where baseline is the depth at the last retained
-      clustering (``table.clustered_baseline_depth``): a big cell
-      legitimately spans several files and range boundaries straddle
-      cells, so only growth ABOVE the clustered shape is reducible
-      patch fragmentation (the per-cell-pruning degradation VERDICT
-      r11 flagged) — re-cluster with ``optimize_ivf_layout``; skipped
-      after a rebuild (fresh layout).
+    - count drift (``ivf_index_staleness``) ≥ ``refit_staleness``
+      (default 0.5) → ``rebuild_ivf_index``: sync keeps content correct
+      but never moves centroids, so recall decays silently;
+    - else, when probed, mean-residual inflation (``ivf_fit_drift``, one
+      column-pruned data pass) ≥ ``MAINTAIN_REFIT_FIT_DRIFT`` (25%) →
+      rebuild: the upsert-heavy blind spot of the count probe. The probe
+      runs with ``check_fit_drift=True`` or, by default, once the
+      manifest-only churn walk ``ivf_base_churn_since_fit`` reads ≥
+      ``fit_probe_churn`` (50%) of the corpus rewritten since the fit
+      (``None`` disables the schedule);
+    - else base ``appended``/``rewritten`` → ``sync_ivf_index``;
+    - else no content action.
 
-    ``vacuum_retain_last`` (optional) completes the lifecycle with the
-    retention verb: after the content/compact actions,
-    ``vacuum_ivf_index`` sweeps centroid versions, unreferenced layout
-    directories older than ``vacuum_min_age_sec`` (the in-flight-build
-    safety window), and the retained layout's internal sync-patch
-    versions.
-
-    ``dry_run=True`` returns the PLAN without touching anything; a real
-    run re-probes fragmentation AFTER the content action (a scattered
-    sync adds the very patch file the probe measures), so it may
-    compact where the plan did not. Requires a versioned-base "vt"
-    build (the same contract as ``sync_ivf_index``). Returns
-    ``{"actions", "reasons", "kind", "growth", "frag_depth",
+    The layout leg re-clusters on ``cell``; a big cell legitimately
+    spans several files, which the clustered-baseline floor absorbs.
+    ``vacuum_min_age_sec`` is ``vacuum_ivf_index``'s in-flight-build
+    window. Returns ``{"actions", "reasons", "kind", "growth",
+    "fit_drift", "churn_since_fit", "frag_depth", "frag_floor",
     "dry_run"[, "centroid_version"]}``."""
-    from ..table import (
-        VersionedTable,
-        clustered_baseline_depth,
-        stats_overlap_depth,
-    )
-
-    if vacuum_retain_last is not None and vacuum_retain_last < 1:
-        # validate the retention leg BEFORE any content action runs —
-        # surfacing this from vacuum() after a rebuild/sync already
-        # executed would lose the report of what ran (ADVICE r12)
-        raise ValueError(
-            "vacuum_retain_last must be >= 1 (or None to skip the "
-            f"retention leg), got {vacuum_retain_last}"
-        )
-    cents, meta = load_ivf_index(spark, index_path)
-    if not meta.get("base"):
-        raise ValueError(
-            f"IVF index at {index_path} was not built with base_path= — "
-            "maintain_ivf_index needs the recorded base sync point"
-        )
-    if meta.get("layout_kind") != "vt":
-        raise ValueError(
-            f"IVF index at {index_path} has an immutable directory layout "
-            "(pre-r11 build) — rebuild with build_ivf_index(base_path=...) "
-            "to get the maintainable VersionedTable layout"
-        )
-    st = ivf_index_rowset_staleness(
-        spark, index_path, meta=meta, allow_rewritten=True
-    )
-    growth = ivf_index_staleness(spark, index_path, sf_dir=None, meta=meta)
-    fit_drift = None
-    churn = None
-    probe_fit = check_fit_drift
-    auto_probed = False
-    if (
-        not probe_fit
-        and fit_probe_churn is not None
-        and growth < refit_staleness
-        and (meta.get("fit") or {}).get("base_version") is not None
-    ):
-        # SCHEDULED probe (r13, VERDICT r12 #7): the manifest-only churn
-        # walk (rewritten rows since the FIT, the volume the count probe
-        # is blind to) auto-enables the one data pass once it crosses
-        # ``fit_probe_churn`` of the corpus — the upsert-heavy blind
-        # spot is now caught by default, not by operator knowledge.
-        # Pre-r13 fit records (no base_version) never auto-probe; the
-        # explicit opt-in below still covers them (and pre-r12 indexes
-        # with no fit stats still fail LOUD there — an opt-in that
-        # silently probed nothing would hide exactly the decay the flag
-        # exists to catch).
-        churn = ivf_base_churn_since_fit(spark, meta)
-        if churn is not None and churn >= fit_probe_churn:
-            probe_fit = auto_probed = True
-    if probe_fit and growth < refit_staleness:
-        # ONE column-pruned data pass over the base (the manifest probes
-        # stay free) — the refit signal count growth is blind to
-        # (upsert-heavy bases mutate vectors without moving the count).
-        # Skipped when the FREE count probe already mandates the rebuild
-        # (the data pass would be redundant — the refit re-scans anyway).
-        fit_drift = ivf_fit_drift(
-            spark, index_path, preloaded=(cents, meta)
-        )["rel_drift"]
-    # exactly ONE content action per maintenance call — structural
-    # (VERDICT r12 #6): a plan that held both rebuild and sync would run
-    # them sequentially and sync a layout the rebuild just replaced
-    content: str | None = None
-    reasons: list[str] = []
-    if growth >= refit_staleness:
-        content = "rebuild"
-        reasons.append(
-            f"collection moved {growth:.0%} since the quantizer fit "
-            f"(>= {refit_staleness:.0%}) — sync cannot move centroids, "
-            "recall decays silently; refit"
-            + (" (fit-drift probe skipped: redundant)" if check_fit_drift
-               else "")
-        )
-    elif fit_drift is not None and fit_drift >= refit_fit_drift:
-        content = "rebuild"
-        reasons.append(
-            f"mean assigned-centroid distance inflated {fit_drift:.0%} "
-            f"since the fit (>= {refit_fit_drift:.0%}) with count drift "
-            f"only {growth:.0%} — the upsert-heavy blind spot of the "
-            "count probe; refit"
-            + (f" (probe auto-scheduled: {churn:.0%} of the corpus "
-               "rewritten since the fit)" if auto_probed else "")
-        )
-    elif st["kind"] != "unchanged":
-        content = "sync"
-        reasons.append(
-            f"base {st['kind']} since v{st['built_at_base_version']} and "
-            f"drift {growth:.0%} below the refit threshold — repair "
-            "content at change-feed cost (stored quantizer)"
-        )
-    else:
-        reasons.append(
-            f"base unchanged since v{st['built_at_base_version']} and "
-            f"drift {growth:.0%} below the refit threshold — no content "
-            "action"
-        )
-
-    def frag(m: dict) -> tuple[int, int]:
-        lay = VersionedTable(spark, f"{index_path}/{m['layout_dir']}")
-        depth = stats_overlap_depth(lay.manifest(), "cell")
-        # depth at the last retained clustering = the layout's
-        # legitimate shape; only growth above max(it, frag_depth_max)
-        # is reducible patch fragmentation
-        floor = max(frag_depth_max, clustered_baseline_depth(lay, "cell"))
-        return depth, floor
-
-    depth, floor = frag(meta)
-    if dry_run:
-        plan: list[str] = [content] if content else []
-        if content != "rebuild" and depth > floor:
-            plan.append("compact")
-            reasons.append(
-                f"layout cell overlap depth {depth} > {floor} (max of "
-                "frag_depth_max and the last clustering's depth) — "
-                "per-cell pruning degraded; re-cluster"
-            )
-        if vacuum_retain_last is not None:
-            plan.append("vacuum")
-            reasons.append(
-                f"sweep index storage to the newest {vacuum_retain_last} "
-                "centroid version(s) + retained layouts"
-            )
-        return {"actions": plan, "reasons": reasons, "kind": st["kind"],
-                "growth": growth, "fit_drift": fit_drift,
-                "churn_since_fit": churn,
-                "frag_depth": depth, "frag_floor": floor, "dry_run": True}
-    actions: list[str] = []
-    if content == "rebuild":
-        rebuild_ivf_index(spark, index_path)
-        _c, meta = load_ivf_index(spark, index_path)  # new layout_dir
-        actions.append("rebuild")
-    elif content == "sync":
-        sync_ivf_index(
-            spark, index_path, idempotency_token=idempotency_token
-        )
-        actions.append("sync")
-    depth, floor = frag(meta)  # re-probe: the sync may have fragmented
-    if content != "rebuild" and depth > floor:
-        optimize_ivf_layout(spark, index_path)
-        actions.append("compact")
-        reasons.append(
-            f"post-sync layout cell overlap depth {depth} > {floor} "
-            "(max of frag_depth_max and the last clustering's depth) — "
-            "re-clustered"
-        )
-        depth, _ = frag(meta)
-    if vacuum_retain_last is not None:
-        swept = vacuum_ivf_index(
-            spark, index_path, retain_last=vacuum_retain_last,
-            min_age_sec=vacuum_min_age_sec,
-        )
-        actions.append("vacuum")
-        reasons.append(
-            f"swept {swept} unreferenced layout dir(s), retaining the "
-            f"newest {vacuum_retain_last} centroid version(s)"
-        )
-    cv = VersionedTable(spark, f"{index_path}/centroids").manifest()["version"]
-    return {"actions": actions, "reasons": reasons, "kind": st["kind"],
-            "growth": growth, "fit_drift": fit_drift,
-            "churn_since_fit": churn, "frag_depth": depth,
-            "frag_floor": floor, "dry_run": False, "centroid_version": cv}
+    art = _IvfIndex(spark, index_path, refit_staleness, idempotency_token,
+                    check_fit_drift, fit_probe_churn, vacuum_min_age_sec)
+    rep = maintain(art, dry_run=dry_run, frag_depth_max=frag_depth_max,
+                   vacuum_retain_last=vacuum_retain_last)
+    out = {"actions": rep["actions"], "reasons": rep["reasons"],
+           "kind": art.kind, "growth": art.growth,
+           "fit_drift": art.fit_drift, "churn_since_fit": art.churn,
+           "frag_depth": rep["frag_depth"],
+           "frag_floor": rep["frag_floor"], "dry_run": dry_run}
+    if not dry_run:
+        out["centroid_version"] = VersionedTable(
+            spark, f"{index_path}/centroids"
+        ).manifest()["version"]
+    return out
 
 
 def vacuum_ivf_index(
@@ -1601,7 +1517,6 @@ def vacuum_ivf_index(
     index_path: str,
     retain_last: int = 1,
     min_age_sec: int = 3600,
-    vt_layout_retain_last: int = 1,
 ) -> int:
     """Sweep index storage: vacuum the centroid table to its newest
     ``retain_last`` versions, then delete every per-build layout directory
@@ -1611,10 +1526,8 @@ def vacuum_ivf_index(
 
     Repairable layouts (r11): a retained ``VersionedTable`` layout
     accumulates internal versions + change files as ``sync_ivf_index``
-    patches it — those are vacuumed to the newest
-    ``vt_layout_retain_last`` internal versions here (serving always
-    reads the layout's latest state, so 1 is safe; raise it only if you
-    time-travel the layout table directly).
+    patches it — those are vacuumed to the newest internal version here
+    (serving always reads the layout's latest state).
 
     ``min_age_sec``: an unreferenced layout younger than this is SKIPPED —
     ``build_ivf_index`` writes its layout BEFORE committing the centroid
@@ -1629,8 +1542,6 @@ def vacuum_ivf_index(
     are stamped by the storage system, and clock skew between driver and
     a remote object store would otherwise silently shrink the safety
     window and sweep an in-flight build's layout (r6 ADVICE)."""
-    from ..table import VersionedTable
-
     vt = VersionedTable(spark, f"{index_path}/centroids")
     vt.vacuum(retain_last=retain_last)
     referenced = set()
@@ -1641,9 +1552,7 @@ def vacuum_ivf_index(
         if meta.get("layout_kind") == "vt":
             vt_layouts.add(meta["layout_dir"])
     for ld in vt_layouts:
-        VersionedTable(spark, f"{index_path}/{ld}").vacuum(
-            retain_last=vt_layout_retain_last
-        )
+        VersionedTable(spark, f"{index_path}/{ld}").vacuum(retain_last=1)
     jvm = spark._jvm
     HPath = jvm.org.apache.hadoop.fs.Path
     root = HPath(index_path)

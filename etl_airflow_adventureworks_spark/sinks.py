@@ -8,11 +8,10 @@ table) and a JDBC sink with batched writes for a kept-Postgres deployment.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .sources.parquet import invalidate_scan_memo
+from .table import TARGET_FILE_BYTES, files_for_bytes
 
 
 def write_table(
@@ -68,7 +67,7 @@ def write_jdbc(
 def compact_table(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     zorder: list[str] | None = None,
 ) -> int:
     """Small-files compaction (table maintenance): rewrite a parquet
@@ -106,7 +105,7 @@ def compact_table(
             total += st.getLen()
     if total == 0:
         raise ValueError(f"compact_table: no parquet data files under {path}")
-    n_files = max(1, math.ceil(total / target_file_bytes))
+    n_files = files_for_bytes(total, target=target_file_bytes)
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + ".compacting"
     if zorder:
@@ -129,15 +128,16 @@ def compact_table(
 def write_size_targeted(
     df: DataFrame,
     path: str,
-    target_mb: int = 256,
+    target_mb: int = TARGET_FILE_BYTES >> 20,
     fmt: str = "parquet",
     compression: str | None = None,
     partition_by: list[str] | None = None,
     sample_rows: int = 10_000,
 ) -> int:
-    """Overwrite write with a TARGET OUTPUT FILE SIZE (default 256 MB —
-    the object-store sweet spot: large enough to amortize request cost
-    and scan setup, small enough to parallelize and retry).
+    """Overwrite write with a TARGET OUTPUT FILE SIZE (default: the
+    ``table.TARGET_FILE_BYTES`` every other writer sizes to — large
+    enough to amortize request cost and scan setup, small enough to
+    parallelize and retry).
 
     Spark sizes output files in ROWS (``maxRecordsPerFile``), not bytes,
     so the bytes→rows conversion is measured, not guessed: a

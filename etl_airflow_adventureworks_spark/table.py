@@ -45,6 +45,7 @@ s3a:// behave identically modulo the rename caveat above.
 from __future__ import annotations
 
 import json
+import math
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,6 +89,19 @@ _MAX_COMMIT_ATTEMPTS = 5
 #: way (see ``VersionedTable._candidate_files``). Also the "bounded
 #: window" line under which a rewrite coalesces its replacement files.
 _PRUNE_KEYS_COLLECT_MAX = 100_000
+
+#: target bytes per data file — the one sizing rule of every writer that
+#: derives a file count from bytes: ``optimize``, ``sinks.compact_table``
+#: and ``write_size_targeted``, the IVF layout writer and the near-dup
+#: index append
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def files_for_bytes(total: int, floor: int = 1, target: int | None = None) -> int:
+    """Output file count for ``total`` bytes: ``total`` over the target
+    file size (``TARGET_FILE_BYTES`` unless ``target`` overrides it),
+    rounded up, never below ``floor``."""
+    return max(floor, math.ceil(total / (target or TARGET_FILE_BYTES)))
 
 
 def numeric_stats_types() -> tuple:
@@ -1812,7 +1826,6 @@ class VersionedTable:
         zorder: list[str] | None = None,
         num_files: int | None = None,
         stats_cols: list[str] | None = None,
-        target_file_bytes: int = 128 * 1024 * 1024,
         cluster_by: list[str] | None = None,
         min_files: int | None = None,
     ) -> int:
@@ -1849,8 +1862,7 @@ class VersionedTable:
             raise ValueError("optimize: pass zorder OR cluster_by, not both")
         return self._occ_retry(
             lambda: self._optimize_once(
-                zorder, num_files, stats_cols, target_file_bytes, cluster_by,
-                min_files,
+                zorder, num_files, stats_cols, cluster_by, min_files,
             )
         )
 
@@ -1859,17 +1871,12 @@ class VersionedTable:
         zorder: list[str] | None,
         num_files: int | None,
         stats_cols: list[str] | None,
-        target_file_bytes: int,
         cluster_by: list[str] | None = None,
         min_files: int | None = None,
     ) -> int:
         df = self.read()
         if num_files is None:
-            import math
-
-            num_files = max(
-                1, math.ceil(self.visible_bytes() / target_file_bytes)
-            )
+            num_files = files_for_bytes(self.visible_bytes())
         if min_files:
             num_files = max(num_files, min_files)
         if zorder:
@@ -2705,23 +2712,28 @@ def _is_patch_op(op: dict) -> bool:
     )
 
 
-def clustered_baseline_depth(vt: "VersionedTable", col: str) -> int:
-    """``stats_overlap_depth`` at the most recent retained CLUSTERING of
-    the table — the bootstrap build or an optimize rewrite, i.e. the
-    newest manifest whose op is not a patch (CDC apply / upsert / delete
-    / index append). This is the reference a maintain policy compares
-    the CURRENT depth against: depth above it is reducible fragmentation
-    (maintenance patches spanning the key range), depth AT it is the
-    layout's legitimate shape (e.g. a hot IVF cell that genuinely spans
-    several files — compaction cannot and should not reduce that).
-    Falls back to the oldest retained manifest when vacuum dropped every
+def _last_clustering(vt: "VersionedTable") -> dict:
+    """The most recent retained CLUSTERING manifest of the table — the
+    bootstrap build or an optimize rewrite, i.e. the newest manifest
+    whose op is not a patch (CDC apply / upsert / delete / index
+    append); the oldest retained manifest when vacuum dropped every
     clustering commit (conservative: under-triggers, never churns)."""
     vs = vt.versions()
     for v in reversed(vs):
         m = vt.manifest(v)
         if not _is_patch_op(m.get("op") or {}):
-            return stats_overlap_depth(m, col)
-    return stats_overlap_depth(vt.manifest(vs[0]), col)
+            return m
+    return vt.manifest(vs[0])
+
+
+def clustered_baseline_depth(vt: "VersionedTable", col: str) -> int:
+    """``stats_overlap_depth`` at the table's last clustering
+    (``_last_clustering``). This is the reference a maintain policy compares
+    the CURRENT depth against: depth above it is reducible fragmentation
+    (maintenance patches spanning the key range), depth AT it is the
+    layout's legitimate shape (e.g. a hot IVF cell that genuinely spans
+    several files — compaction cannot and should not reduce that)."""
+    return stats_overlap_depth(_last_clustering(vt), col)
 
 
 def _norm_table_path(p: str) -> str:
@@ -3007,22 +3019,227 @@ def stream_upsert_to_versioned(
     )
 
 
-#: maintain_table's fragmentation tolerance (the same default as the
-#: IVF maintainer): a clustered layout may legitimately sit 1 patch
-#: file deep; compaction triggers only ABOVE max(this, the depth the
-#: last clustering itself had), so a hot key range that genuinely
-#: spans files never causes churn.
-TABLE_FRAG_DEPTH_MAX = 2
+#: fragmentation tolerance of every maintained layout: a clustered
+#: layout may legitimately sit 1 patch file deep; compaction triggers
+#: only ABOVE max(this, the depth the last clustering itself had), so a
+#: hot key range that genuinely spans files never causes churn
+FRAG_DEPTH_MAX = 2
 
-#: maintain_table's small-file probe: a visible file under this size is
-#: "small"; compaction triggers when MOST files are small AND there are
-#: enough of them for the metadata overhead to matter. 16 MiB is an
-#: eighth of the optimize target (128 MiB) — comfortably past parquet
+#: the small-file probe of plain tables and rollups: a visible file
+#: under this size is "small"; compaction triggers when MOST files are
+#: small AND there are enough of them for the metadata overhead to
+#: matter. An eighth of the file target — comfortably past parquet
 #: row-group efficiency, far under anything a healthy large table
 #: produces.
-SMALL_FILE_BYTES = 16 * 1024 * 1024
+SMALL_FILE_BYTES = TARGET_FILE_BYTES // 8
 SMALL_FILE_MIN_COUNT = 8
 SMALL_FILE_MAX_FRACTION = 0.5
+
+
+class Maintained:
+    """One derived artifact as ``maintain`` sees it. A subclass declares
+    only what is its own — the content classifier and its verbs, the
+    layout table and cluster key, the compact and vacuum verbs; the plan
+    around them is ``maintain``'s."""
+
+    #: the noun the vacuum reasons name
+    what = "table"
+    #: what the vacuum verb's count counts
+    swept_unit = "file(s)"
+    #: a rebuild lands a freshly clustered layout: no compaction follows
+    rebuild_clusters = True
+    #: the small-file trigger applies (an index layout holds one file
+    #: per key range by design, however small its files are)
+    small_files = False
+
+    def classify(self, dry_run: bool) -> tuple[str | None, list[str]]:
+        """``(None or the content verb to run, reasons)``."""
+        return None, []
+
+    def run(self, action: str) -> None:
+        raise NotImplementedError(action)
+
+    def layout(self) -> tuple[VersionedTable | None, str | None]:
+        """``(layout table or None, cluster key or None)``."""
+        raise NotImplementedError
+
+    def compact(self) -> None:
+        raise NotImplementedError
+
+    def vacuum(self, retain_last: int) -> int:
+        raise NotImplementedError
+
+
+def _probe_layout(vt, key, small_files: bool, frag_depth_max: int) -> dict:
+    """Manifest-only layout probe: overlap depth on ``key`` vs its floor
+    and, for small-file artifacts, one size stat per file, early-stopped
+    once the trigger's outcome is decided (on large tables
+    ``small_files`` is a decision-exact lower bound, not a census)."""
+    out = {"frag_depth": None, "frag_floor": None, "files": 0,
+           "small_files": 0}
+    man = vt.manifest() if vt is not None else None
+    if man is None:
+        return out
+    files, stats = man["files"], man.get("stats") or {}
+    out["files"] = len(files)
+    if key is not None and any(key in (stats.get(f) or {}) for f in files):
+        out["frag_depth"] = stats_overlap_depth(man, key)
+        out["frag_floor"] = max(
+            frag_depth_max, clustered_baseline_depth(vt, key)
+        )
+    if small_files and len(files) > SMALL_FILE_MIN_COUNT:
+        need = int(len(files) * SMALL_FILE_MAX_FRACTION)
+        n_small = 0
+        for seen, f in enumerate(files):
+            size = vt._fs.getFileStatus(vt._HPath(f"{vt.path}/{f}")).getLen()
+            if size < SMALL_FILE_BYTES:
+                n_small += 1
+            if n_small > need or n_small + (len(files) - seen - 1) <= need:
+                break
+        out["small_files"] = n_small
+    return out
+
+
+def maintain(
+    art: Maintained,
+    dry_run: bool = False,
+    frag_depth_max: int = FRAG_DEPTH_MAX,
+    vacuum_retain_last: int | None = None,
+) -> dict:
+    """The ONE maintenance plan of every maintained artifact — plain
+    tables, rollups, near-dup and IVF indexes (the lakehouse OPTIMIZE +
+    VACUUM loop as one mechanism; SCALING.md "Maintenance policy"):
+
+    1. the retention value is checked before anything runs;
+    2. the artifact's classifier picks the content action — none or one
+       verb (sync / refresh / rebuild) — and it runs;
+    3. the layout is probed, manifest-only: compaction triggers when
+       ``stats_overlap_depth`` on the cluster key exceeds
+       ``max(frag_depth_max, clustered_baseline_depth)`` (growth above
+       the last clustering's own depth is reducible patch
+       fragmentation) or, for small-file artifacts, when most of more
+       than ``SMALL_FILE_MIN_COUNT`` visible files are under
+       ``SMALL_FILE_BYTES`` (the trickle-ingest shape); never right
+       after a rebuild that re-clusters;
+    4. compact, then vacuum to the newest ``vacuum_retain_last``
+       versions;
+    5. ``dry_run`` returns the same plan without running any of it —
+       it probes the layout BEFORE the content action, so a real run
+       (which re-probes after it) may compact where the plan did not.
+
+    Returns ``{"actions", "reasons", "frag_depth", "frag_floor",
+    "files", "small_files", "dry_run"[, "swept"]}``, the layout fields
+    describing the layout as the call leaves it."""
+    if vacuum_retain_last is not None and vacuum_retain_last < 1:
+        raise ValueError(
+            "vacuum_retain_last must be >= 1 (or None to skip the "
+            f"retention leg), got {vacuum_retain_last}"
+        )
+    content, reasons = art.classify(dry_run)
+    actions = [content] if content else []
+    if content and not dry_run:
+        art.run(content)
+    vt, key = art.layout()
+    lay = _probe_layout(vt, key, art.small_files, frag_depth_max)
+    depth, floor = lay["frag_depth"], lay["frag_floor"]
+    compact = False
+    if not (content == "rebuild" and art.rebuild_clusters):
+        if depth is not None and depth > floor:
+            compact = True
+            reasons.append(
+                f"layout: overlap depth {depth} > {floor} on {key!r} "
+                "(max of frag_depth_max and the last "
+                "clustering's own depth) — patch files have stacked "
+                "across its key ranges; re-cluster"
+            )
+        if (
+            lay["files"] > SMALL_FILE_MIN_COUNT
+            and lay["small_files"] / lay["files"] > SMALL_FILE_MAX_FRACTION
+        ):
+            compact = True
+            reasons.append(
+                f"layout: {lay['small_files']}/{lay['files']} visible "
+                f"files under {SMALL_FILE_BYTES >> 20} MiB — "
+                "trickle-ingest shape; compact to target-sized files"
+            )
+    if compact:
+        actions.append("compact")
+        if not dry_run:
+            art.compact()
+            lay = _probe_layout(*art.layout(), art.small_files,
+                                frag_depth_max)
+    out = {"actions": actions, "reasons": reasons, **lay, "dry_run": dry_run}
+    if vacuum_retain_last is not None:
+        actions.append("vacuum")
+        if dry_run:
+            reasons.append(
+                f"sweep {art.what} versions to the newest "
+                f"{vacuum_retain_last}"
+            )
+        else:
+            out["swept"] = art.vacuum(vacuum_retain_last)
+            reasons.append(
+                f"swept {out['swept']} unreferenced {art.swept_unit}, "
+                f"retaining the newest {vacuum_retain_last} {art.what} "
+                "version(s)"
+            )
+    if not actions:
+        reasons.append("nothing to do")
+    return out
+
+
+class TableLayout(Maintained):
+    """A plain ``VersionedTable`` (and a rollup's own table): no content
+    verb; the cluster key and compaction spec are the caller's or else
+    the ones the newest clustering ``optimize`` recorded in its manifest
+    op; compaction without any spec coalesces to target-sized files and
+    keeps every stats column the manifest records; the vacuum honors the
+    consumer registry."""
+
+    rebuild_clusters = False
+    small_files = True
+
+    def __init__(self, vt: VersionedTable, cluster_by=None, zorder=None):
+        self.vt = vt
+        self.explicit = (
+            {"cluster_by": list(cluster_by)} if cluster_by
+            else {"zorder": list(zorder)} if zorder else None
+        )
+        self.spec: dict = {}
+        self.stats: dict = {}
+
+    def layout(self):
+        self.stats = self.vt.manifest().get("stats") or {}
+        self.spec = self.explicit
+        if self.spec is None:
+            op = _last_clustering(self.vt).get("op") or {}
+            keys = ("cluster_by", "zorder", "min_files", "stats_cols")
+            self.spec = (
+                {k: op[k] for k in keys if k in op}
+                if op.get("op") == "optimize" else {}
+            )
+        lead = (self.spec.get("cluster_by") or self.spec.get("zorder")
+                or [None])[0]
+        return self.vt, lead
+
+    def compact(self) -> None:
+        # never let a compaction DROP the stats the pruning depends on
+        stats_cols = self.spec.get("stats_cols")
+        if stats_cols is None and not self.spec:
+            stats_cols = sorted(
+                {c for e in self.stats.values() for c in (e or {})}
+            ) or None
+        self.vt.optimize(
+            cluster_by=self.spec.get("cluster_by"),
+            zorder=self.spec.get("zorder"),
+            min_files=self.spec.get("min_files"),
+            stats_cols=stats_cols,
+        )
+
+    def vacuum(self, retain_last: int) -> int:
+        return self.vt.vacuum(
+            retain_last=retain_last, respect_consumers="auto"
+        )
 
 
 def maintain_table(
@@ -3031,169 +3248,32 @@ def maintain_table(
     cluster_by: "list[str] | None" = None,
     zorder: "list[str] | None" = None,
     dry_run: bool = False,
-    frag_depth_max: int = TABLE_FRAG_DEPTH_MAX,
-    small_file_bytes: int = SMALL_FILE_BYTES,
+    frag_depth_max: int = FRAG_DEPTH_MAX,
     vacuum_retain_last: "int | None" = None,
 ) -> dict:
-    """ONE maintenance call for a plain ``VersionedTable`` (r15) — the
-    generic peer of ``maintain_rollup`` / ``maintain_neardup_index`` /
-    ``maintain_ivf_index``, closing the lifecycle gap those leave: a
-    SOURCE table (or replica) living under steady keyed merges needs
-    the same classify-then-act loop its derived artifacts get. Probes
-    are manifest/metadata-only (file stats endpoints + one size stat
-    per file — never a data read); the verbs are the existing
-    ``optimize`` / ``vacuum``.
+    """``maintain`` for a plain ``VersionedTable`` — a source table or
+    replica living under steady keyed merges and appends. No content
+    action; the layout leg alone:
 
-    Two independent compaction triggers:
+    - **fragmentation** (clustered layouts): bounded merges each land
+      ~one range-straddling patch file (SCALING.md "Bounded merges no
+      longer fragment"), so the depth on the leading clustering column
+      grows ~1 per merge; re-cluster with the recorded (or passed)
+      ``cluster_by`` / ``zorder`` spec;
+    - **small files** (any layout): the append / trickle-ingest shape;
+      compact to ``TARGET_FILE_BYTES`` files, keeping the recorded stats
+      columns.
 
-    - **fragmentation** (clustered layouts): ``stats_overlap_depth`` on
-      the leading clustering column exceeds ``max(frag_depth_max, the
-      depth the last clustering itself had)`` — repeated bounded merges
-      each land ~one range-straddling patch file (see SCALING.md
-      "Bounded merges no longer fragment"), so depth grows ~1 per sync
-      and pruning degrades toward scan-everything; re-clustering
-      restores it.
-    - **small files** (any layout): more than ``SMALL_FILE_MIN_COUNT``
-      visible files, most of them under ``small_file_bytes`` — the
-      append/trickle-ingest shape; compacting to the 128 MiB optimize
-      target restores scan efficiency.
-
-    The clustering spec is SELF-DESCRIBING: ``optimize`` records its
-    ``zorder``/``cluster_by``/``min_files``/``stats_cols`` in the
-    manifest op (r15), and this call re-clusters with the recorded spec
-    of the newest clustering commit unless the caller overrides it.
-    With neither a recorded nor an explicit spec, compaction is a plain
-    coalesce to target-sized files. ``vacuum_retain_last`` adds the
-    retention sweep AFTER any compaction, honoring the consumer
-    registry (``respect_consumers="auto"``). ``dry_run`` reports the
-    plan without executing. Returns ``{"actions", "reasons",
-    "frag_depth", "frag_floor", "files", "small_files", "dry_run"}``
-    (depth fields None when no clustered column is probeable;
-    ``small_files`` is the count at the early stop — the sweep halts as
-    soon as the trigger's outcome is decided, so on large tables it is
-    a decision-exact lower bound, not a census)."""
-    if vacuum_retain_last is not None and vacuum_retain_last < 1:
-        raise ValueError(
-            f"maintain_table: vacuum_retain_last must be >= 1, got "
-            f"{vacuum_retain_last} (retain_last=0 would drop the "
-            "current version)"
-        )
+    Returns ``maintain``'s report (depth fields None when no clustered
+    column is probeable)."""
     if cluster_by and zorder:
         raise ValueError("maintain_table: pass cluster_by OR zorder, "
                          "not both")
     vt = VersionedTable(spark, path)
-    man = vt.manifest()
-    if man is None:
+    if vt.manifest() is None:
         raise FileNotFoundError(f"no committed version at {path}")
-
-    # resolve the clustering spec: explicit args win; else the newest
-    # clustering commit's recorded spec (optimize, r15). The walk is
-    # the clustered_baseline_depth one — bounded by retained versions.
-    spec: dict = {}
-    if cluster_by:
-        spec = {"cluster_by": list(cluster_by)}
-    elif zorder:
-        spec = {"zorder": list(zorder)}
-    else:
-        for v in reversed(vt.versions()):
-            m = vt.manifest(v)
-            if m is None:
-                continue  # concurrent vacuum mid-walk
-            op = m.get("op") or {}
-            if _is_patch_op(op):
-                continue
-            if op.get("op") == "optimize":
-                spec = {
-                    k: op[k]
-                    for k in ("cluster_by", "zorder", "min_files",
-                              "stats_cols")
-                    if k in op
-                }
-            break  # first non-patch commit ends the walk, spec or not
-
-    lead = (spec.get("cluster_by") or spec.get("zorder") or [None])[0]
-    depth = floor = None
-    stats = man.get("stats") or {}
-    if lead is not None and any(lead in (e or {}) for e in stats.values()):
-        depth = stats_overlap_depth(man, lead)
-        floor = max(frag_depth_max, clustered_baseline_depth(vt, lead))
-
-    files = man["files"]
-    n_small = 0
-    if len(files) > SMALL_FILE_MIN_COUNT:
-        # one size stat per file, early-stopped once the trigger can no
-        # longer fire (a huge healthy table pays ~half its file count in
-        # metadata calls at worst, zero data reads)
-        need = int(len(files) * SMALL_FILE_MAX_FRACTION)
-        for seen, f in enumerate(files):
-            if (
-                vt._fs.getFileStatus(
-                    vt._HPath(f"{vt.path}/{f}")
-                ).getLen() < small_file_bytes
-            ):
-                n_small += 1
-            if n_small > need or \
-                    n_small + (len(files) - seen - 1) <= need:
-                break
-
-    actions: list[str] = []
-    reasons: list[str] = []
-    compact = False
-    if depth is not None and depth > floor:
-        compact = True
-        reasons.append(
-            f"layout overlap depth {depth} > {floor} on {lead!r} (max of"
-            f" frag_depth_max and the last clustering's own depth) — "
-            "bounded merges have stacked range-straddling patch files"
-        )
-    if (
-        len(files) > SMALL_FILE_MIN_COUNT
-        and n_small / len(files) > SMALL_FILE_MAX_FRACTION
-    ):
-        compact = True
-        reasons.append(
-            f"{n_small}/{len(files)} visible files under "
-            f"{small_file_bytes >> 20} MiB — trickle-ingest shape; "
-            "compact to target-sized files"
-        )
-    if compact:
-        actions.append("compact")
-    if vacuum_retain_last is not None:
-        actions.append("vacuum")
-        reasons.append(
-            f"sweep versions to the newest {vacuum_retain_last} "
-            "(consumer registry honored)"
-        )
-    if not actions:
-        reasons.append("layout at its clustered shape; nothing to do")
-
-    out = {
-        "actions": actions, "reasons": reasons, "frag_depth": depth,
-        "frag_floor": floor, "files": len(files), "small_files": n_small,
-        "dry_run": dry_run,
-    }
-    if dry_run:
-        return out
-    if compact:
-        # never let a compaction DROP the stats the pruning depends on:
-        # absent a recorded/derivable spec column set, keep whatever
-        # columns the current manifest records stats for
-        stats_cols = spec.get("stats_cols")
-        if stats_cols is None and not spec:
-            kept = sorted({c for e in stats.values() for c in (e or {})})
-            stats_cols = kept or None
-        vt.optimize(
-            cluster_by=spec.get("cluster_by"),
-            zorder=spec.get("zorder"),
-            min_files=spec.get("min_files"),
-            stats_cols=stats_cols,
-        )
-        m2 = vt.manifest()
-        out["files"] = len(m2["files"])
-        if lead is not None:
-            out["frag_depth"] = stats_overlap_depth(m2, lead)
-    if vacuum_retain_last is not None:
-        out["swept"] = vt.vacuum(
-            retain_last=vacuum_retain_last, respect_consumers="auto"
-        )
-    return out
+    return maintain(
+        TableLayout(vt, cluster_by, zorder), dry_run=dry_run,
+        frag_depth_max=frag_depth_max,
+        vacuum_retain_last=vacuum_retain_last,
+    )

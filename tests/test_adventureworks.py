@@ -16,6 +16,10 @@ from pyspark.sql import functions as F
 from etl_airflow_adventureworks_spark.plans import adventureworks as aw
 
 
+@pytest.mark.skipif(
+    not os.path.exists(f"{aw.REFERENCE_DATA}/Production Product.csv"),
+    reason="Production Product.csv not in reference snapshot",
+)
 def test_dim_produto_golden(spark):
     df = aw.dim_produto(spark)
     rows = df.collect()
@@ -31,6 +35,10 @@ def test_dim_produto_golden(spark):
     assert any(r["nome_categoria"] == "Bikes" for r in rows)
 
 
+@pytest.mark.skipif(
+    not os.path.exists(f"{aw.REFERENCE_DATA}/Person Address.csv"),
+    reason="Person Address.csv not in reference snapshot",
+)
 def test_dim_localidade_golden(spark):
     df = aw.dim_localidade(spark)
     assert df.count() == 19614

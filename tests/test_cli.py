@@ -648,3 +648,8 @@ def test_maintain_table_subcommand(spark, tmp_path, capsys):
     assert len(t.versions()) == 1
     assert main(["maintain-table", "--table", t.path]) == 0
     assert "ran ['nothing']" in capsys.readouterr().out
+    # a retention below 1 is refused with exit code 2, as on the other
+    # maintain-* subcommands, not raised out of main
+    assert main(["maintain-table", "--table", t.path,
+                 "--vacuum-retain", "0"]) == 2
+    assert "--vacuum-retain must be >= 1" in capsys.readouterr().out

@@ -439,8 +439,9 @@ def test_batch_num_files_measures_the_batch_not_its_input_files(
     and a filtered read of a big table sizes by the surviving rows, not
     the scanned input files."""
     import etl_airflow_adventureworks_spark.operators.dedup_incremental as di
+    import etl_airflow_adventureworks_spark.table as table
 
-    monkeypatch.setattr(di, "_APPEND_TARGET_FILE_BYTES", 64 * 1024)
+    monkeypatch.setattr(table, "TARGET_FILE_BYTES", 64 * 1024)
     # 40 docs x ~4 KiB text: entry estimate ~40*(384 + 1.6*4096) ≈ 277 KiB
     # -> several files despite the tiny row count
     fat = spark.createDataFrame(
