@@ -5,7 +5,8 @@ buries pandas transforms inside PythonOperator callables
 (dags/etl_dim_produto.py:78-81) and leaves the dims→fact ordering as a
 README instruction (README.md:113, SURVEY.md §3 entry point B). Here each
 task is a thin call into the engine's plans, and the dependency is a real
-DAG edge: ``[dims...] >> fact``.
+DAG edge: ``[dims...] >> fact``. The in-process ``plans.pipeline.build_star``
+mirrors that edge: it runs the dimension loads concurrently, then the fact.
 
 Airflow is not installed in the build image, so everything is gated behind
 an import-try; ``build_dag()`` returns None without Airflow. Deployments

@@ -8,7 +8,8 @@ table) and a JDBC sink with batched writes for a kept-Postgres deployment.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .sources.parquet import invalidate_scan_memo
 from .table import TARGET_FILE_BYTES, files_for_bytes
@@ -21,25 +22,31 @@ def write_table(
     coalesce_to: int | None = None,
     fmt: str = "parquet",
     compression: str | None = None,
-) -> None:
-    """Idempotent overwrite write (op 5). ``partition_by`` drives partition
-    pruning for downstream scans (e.g. fact partitioned by year); at 100 TB
-    this is the layout decision that replaces the reference's b-tree indexes
+) -> int:
+    """Idempotent overwrite write (op 5); returns the number of rows
+    written. ``partition_by`` drives partition pruning for downstream
+    scans (e.g. fact partitioned by year); at 100 TB this is the layout
+    decision that replaces the reference's b-tree indexes
     (create_dw_tables.sql:68-72, SURVEY.md §4).
 
     ``fmt``: parquet (default) / orc / json — same overwrite contract.
     ``compression``: e.g. 'zstd' for parquet/orc (better ratio than the
     default snappy at similar scan speed — the 100 TB storage-bill knob).
+
+    The row count is observed on the write's own job (``DataFrame.observe``),
+    so a caller that needs it pays no re-read of the table.
     """
     if coalesce_to:
         df = df.coalesce(coalesce_to)
-    w = df.write.mode("overwrite").format(fmt)
+    written = Observation()
+    w = df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").format(fmt)
     if compression:
         w = w.option("compression", compression)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
     invalidate_scan_memo(path)
+    return written.get["rows"]
 
 
 def write_jdbc(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,7 +95,12 @@ WAREHOUSE_TABLES = (
 #: ``invalidate_scan_memo`` call drops the entries of STOPPED sessions
 #: (their py4j handles can never serve a scan again); writers that
 #: overwrite a table in place evict it via ``invalidate_scan_memo``.
+#:
+#: Threads share the memo (``plans.pipeline.build_star`` loads its dims
+#: concurrently), so every read or change of it holds ``_MEMO_LOCK``; the
+#: ``spark.read`` that opens a table runs outside the lock.
 _SCAN_MEMO: dict[int, tuple[SparkSession, dict[str, tuple[tuple | None, DataFrame]]]] = {}
+_MEMO_LOCK = threading.Lock()
 
 
 def _session_live(spark: SparkSession) -> bool:
@@ -103,6 +109,7 @@ def _session_live(spark: SparkSession) -> bool:
 
 
 def _sweep_stopped_sessions() -> None:
+    """Drop the memo entries of stopped sessions (caller holds ``_MEMO_LOCK``)."""
     for dead in [s for s, (sess, _) in _SCAN_MEMO.items() if not _session_live(sess)]:
         del _SCAN_MEMO[dead]
 
@@ -139,12 +146,13 @@ def invalidate_scan_memo(path: str | None = None) -> None:
     table is overwritten in place and re-read through ``load_table``
     within the same session — the memoized plan would otherwise serve the
     old file listing. The sinks call this for every path they write."""
-    _sweep_stopped_sessions()
     key = None if path is None else _table_key(path)
-    for _, entries in _SCAN_MEMO.values():
-        for k in [k for k in entries
-                  if key is None or k == key or k.startswith(key + os.sep)]:
-            del entries[k]
+    with _MEMO_LOCK:
+        _sweep_stopped_sessions()
+        for _, entries in _SCAN_MEMO.values():
+            for k in [k for k in entries
+                      if key is None or k == key or k.startswith(key + os.sep)]:
+                del entries[k]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -165,12 +173,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES and name not in WAREHOUSE_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES + WAREHOUSE_TABLES}")
-    _sweep_stopped_sessions()
-    per_session = _SCAN_MEMO.setdefault(id(spark), (spark, {}))[1]
     path = f"{sf_dir}/{name}.parquet"
     key = _table_key(path)
     stamp = _table_stamp(key)
-    cached = per_session.get(key)
+    with _MEMO_LOCK:
+        _sweep_stopped_sessions()
+        per_session = _SCAN_MEMO.setdefault(id(spark), (spark, {}))[1]
+        cached = per_session.get(key)
     if cached is not None and cached[0] == stamp:
         return cached[1]
     if name == "events":
@@ -179,7 +188,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_events_ts(spark.read.parquet(path))
     else:
         df = spark.read.parquet(path)
-    per_session[key] = (stamp, df)
+    with _MEMO_LOCK:
+        per_session[key] = (stamp, df)
     return df
 
 

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -53,3 +58,54 @@ def test_build_star_end_to_end(spark, tmp_path):
     ).count()
     assert orphans == 0
 
+
+#: Spark jobs one warm ``build_star`` at SF_SMOKE may run: each table is
+#: one write whose row count is observed on the write itself (no count()
+#: re-read), plus the plans' own jobs
+BUILD_JOB_BUDGET = 28
+
+
+def test_build_star_job_budget(spark, smoke_star, tmp_path):
+    out = str(tmp_path / "warehouse")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "test-build-star-budget"
+    sc.setJobGroup(group, "one warm build_star")
+    try:
+        counts = build_star(spark, SF_SMOKE, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == smoke_star[1]
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(tracker.getJobIdsForGroup(group))
+    assert 0 < jobs <= BUILD_JOB_BUDGET, jobs
+    # the concurrent dims ran in the caller's job group, not outside it
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+class _DimFailed(RuntimeError):
+    pass
+
+
+def test_build_star_dim_failure_leaves_fact(spark, smoke_star, tmp_path, monkeypatch):
+    out = str(tmp_path / "warehouse")
+    shutil.copytree(smoke_star[0], out)
+    success = os.path.join(out, "fact_sales.parquet", "_SUCCESS")
+    before = os.stat(success)
+
+    def fail(spark, sf_dir):
+        raise _DimFailed("supplier source unavailable")
+
+    load_all()
+    monkeypatch.setitem(QUERIES, "etl_dim_supplier", fail)
+    threads = set(threading.enumerate())
+    with pytest.raises(_DimFailed, match="supplier source unavailable"):
+        build_star(spark, SF_SMOKE, out)
+    # the fact was not rebuilt from a partial set of dims
+    after = os.stat(success)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    # every pool thread has finished by the time build_star returns
+    assert set(threading.enumerate()) <= threads

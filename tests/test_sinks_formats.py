@@ -12,11 +12,14 @@ from etl_airflow_adventureworks_spark.sinks import write_table
 from etl_airflow_adventureworks_spark.sources import load_table
 
 
-@pytest.mark.parametrize("fmt,compression", [
+_FORMATS = [
     ("parquet", "zstd"),
     ("orc", None),
     ("json", None),
-])
+]
+
+
+@pytest.mark.parametrize("fmt,compression", _FORMATS)
 def test_roundtrip(spark, tmp_path, fmt, compression):
     src = load_table(spark, SF_SMOKE, "nation")
     out = str(tmp_path / f"nation_{fmt}")
@@ -29,6 +32,24 @@ def test_roundtrip(spark, tmp_path, fmt, compression):
             F.col("n_regionkey").cast("int"),
         )
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
+
+
+@pytest.mark.parametrize("fmt,compression,layout", [
+    *[(fmt, compression, "plain") for fmt, compression in _FORMATS],
+    ("parquet", None, "partitioned"),
+    ("parquet", None, "coalesced"),
+    ("parquet", None, "empty"),
+])
+def test_write_table_returns_rows_written(spark, tmp_path, fmt, compression, layout):
+    src = load_table(spark, SF_SMOKE, "orders").withColumn("ano", F.year("o_orderdate"))
+    kwargs = {"partitioned": {"partition_by": ["ano"]},
+              "coalesced": {"coalesce_to": 2}}.get(layout, {})
+    if layout == "empty":
+        src = src.filter(F.lit(False))
+    out = str(tmp_path / f"orders_{fmt}_{layout}")
+    rows = write_table(src, out, fmt=fmt, compression=compression, **kwargs)
+    assert rows == spark.read.format(fmt).load(out).count()
+    assert rows == (0 if layout == "empty" else src.count())
 
 
 def test_partitioned_overwrite_idempotent(spark, tmp_path):
