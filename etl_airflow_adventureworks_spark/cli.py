@@ -748,9 +748,13 @@ def main(argv: list[str] | None = None) -> int:
         from .operators.dedup_incremental import (
             append_to_neardup_index,
             minhash_neardup_incremental,
+            neardup_batch_entries,
         )
 
-        batch = spark.read.parquet(args.batch)
+        # the batch's entries, computed once for the check and the accept
+        batch = neardup_batch_entries(
+            spark.read.parquet(args.batch)
+        ).localCheckpoint(eager=True)
         pairs = minhash_neardup_incremental(
             spark, batch, args.index, version=args.version,
             threshold=args.threshold if args.threshold is not None

@@ -131,20 +131,28 @@ def drop_near_dups(
 class CurationResult:
     """Lazy stage outputs of ``curate_corpus``. ``curated`` is the final
     plan; ``report()`` triggers one count per stage and returns the
-    waterfall (stage, rows, dropped) — an action, priced accordingly."""
+    waterfall (stage, rows, dropped) — an action, priced accordingly.
+    A counted stage stays persisted until the next one is counted, so
+    each stage is computed once, from its predecessor."""
 
     curated: DataFrame
     stages: list[tuple[str, DataFrame]] = field(default_factory=list)
 
     def report(self) -> list[dict]:
         out = []
-        prev = None
+        prev = held = None
         for name, df in self.stages:
-            n = df.count()
+            mine = not df.is_cached
+            n = (df.persist() if mine else df).count()
+            if held is not None:
+                held.unpersist()
+            held = df if mine else None
             out.append(
                 {"stage": name, "rows": n, "dropped": (prev - n) if prev is not None else 0}
             )
             prev = n
+        if held is not None:
+            held.unpersist()
         return out
 
 

@@ -382,20 +382,26 @@ def hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hashed_shingle_sets_df(docs: DataFrame) -> DataFrame:
     """``hashed_shingle_sets`` over an arbitrary (doc_id, text) frame."""
+    return with_hashed_shingles(docs.select("doc_id", "text")).select("doc_id", "hh")
+
+
+def with_hashed_shingles(docs: DataFrame) -> DataFrame:
+    """``docs`` plus ``hh``, its ``text``'s ``hashed_shingle_sets``."""
     return (
         docs
         .selectExpr(
-            "doc_id",
+            "*",
             # pad with two zero-hashes so every window read is in range
             f"concat(transform({_TOK}, x -> crc32(x)), array(0L, 0L)) AS th",
         )
         .selectExpr(
-            "doc_id",
+            "*",
             "array_distinct(transform(sequence(0, greatest(size(th) - 5, 0)),"
             f" i -> pmod(element_at(th, i + 1) * 1000003L"
             "       + element_at(th, i + 2) * 31L"
             f"       + element_at(th, i + 3), {_MERSENNE_P}L))) AS hh",
         )
+        .drop("th")
     )
 
 

@@ -17,6 +17,11 @@ collision's exact Jaccard against the batch's broadcast shingle sets in
 the same stage — candidate generation and verification are one pipeline,
 and its output is ∝ LSH collisions.
 
+A batch's entries are ONE (doc_id, text, hh, sig) frame
+(`neardup_batch_entries`) that the probe and the append read as is, or
+derive once from (doc_id, text); build and append share one commit tail
+(`_publish_entries`).
+
 Signatures here are computed per-row (`array_min(transform(...))`) —
 identical values to `dedup.minhash_signatures`'s explode+groupBy form
 (same permutation coefficients, same Mersenne modulus, min over the same
@@ -49,7 +54,7 @@ from .dedup import (
     _N_BANDS,
     _PERM_A,
     _PERM_B,
-    hashed_shingle_sets_df,
+    with_hashed_shingles,
 )
 
 #: band keys from the stored signature array — value-identical strings to
@@ -73,8 +78,8 @@ def _require_doc_frame(docs: DataFrame, what: str) -> None:
         raise ValueError(f"{what} needs columns doc_id, text (missing {sorted(missing)})")
 
 
-def neardup_index_entries(docs: DataFrame) -> DataFrame:
-    """(doc_id, hh, sig) — the persisted per-document dedup state.
+def neardup_batch_entries(docs: DataFrame) -> DataFrame:
+    """(doc_id, text, hh, sig) — ``docs`` with their dedup state.
 
     ``hh`` = distinct hashed 3-token shingles (`hashed_shingle_sets_df`);
     ``sig`` = 32-long MinHash signature computed row-locally:
@@ -85,25 +90,67 @@ def neardup_index_entries(docs: DataFrame) -> DataFrame:
     ingest batches; the explode+groupBy twin stays the right shape for
     full-corpus jobs where codegen'd partial mins win.
     """
-    _require_doc_frame(docs, "neardup_index_entries")
-    return hashed_shingle_sets_df(docs).selectExpr("doc_id", "hh", _SIG_EXPR)
+    _require_doc_frame(docs, "neardup_batch_entries")
+    return with_hashed_shingles(docs.select("doc_id", "text")).selectExpr(
+        "*", _SIG_EXPR
+    )
 
 
-def _cluster_entries(entries: DataFrame, num_files: int | None):
-    """Key-cluster index entries by ``doc_id`` (range partition + sort)
-    and, when ``doc_id`` is numeric, return the ``stats_cols`` to record
-    per-file min/max — what lets ``apply_cdc``'s touched-file probe
-    prune a range-local sync window to the few files whose key range
-    admits it (r11, VERDICT r10 #3) instead of scanning the index."""
-    from ..table import numeric_stats_types
+def neardup_index_entries(docs: DataFrame) -> DataFrame:
+    """(doc_id, hh, sig) — the persisted per-document dedup state
+    (`neardup_batch_entries` without the text)."""
+    return neardup_batch_entries(docs).drop("text")
 
+
+def _entries_of(docs: DataFrame, what: str) -> DataFrame:
+    """``docs`` when it already is a `neardup_batch_entries` frame, else
+    that frame computed once (both callers read it more than once)."""
+    _require_doc_frame(docs, what)
+    if {"hh", "sig"} <= set(docs.columns):
+        return docs
+    return neardup_batch_entries(docs).localCheckpoint(eager=True)
+
+
+def _publish_entries(
+    spark: SparkSession, entries: DataFrame, index_path: str, mode: str,
+    op: str, num_files: int | None, base_path: str | None,
+    base_version: int | None, idempotency_token: str | None = None,
+) -> int:
+    """The commit tail of build and append: resolve the base stamp,
+    key-cluster by ``doc_id`` into ``num_files`` files (per-file min/max
+    stats when numeric, so ``apply_cdc`` prunes a range-local sync),
+    commit, then register on the base — after the commit, so a failed
+    commit leaves no phantom entry; best-effort: the registry is advisory."""
+    from ..table import numeric_stats_types, resolve_base_stamp
+
+    base = (
+        resolve_base_stamp(spark, base_path, base_version)
+        if base_path is not None
+        else None
+    )
     parts = [num_files] if num_files else []
-    clustered = entries.repartitionByRange(*parts, "doc_id").sortWithinPartitions(
-        "doc_id"
+    clustered = (
+        entries.select("doc_id", "hh", "sig")
+        .repartitionByRange(*parts, "doc_id")
+        .sortWithinPartitions("doc_id")
     )
     dtype = entries.schema["doc_id"].dataType
     stats = ["doc_id"] if isinstance(dtype, numeric_stats_types()) else None
-    return clustered, stats
+    # an append records its op even without a base stamp (the maintain
+    # policy's fragmentation baseline must classify appends as PATCHES);
+    # a build records one only with its base
+    op_info = {"op": op} if base or mode == "append" else None
+    if base:
+        op_info["base"] = base
+    v = VersionedTable(spark, index_path).commit(
+        clustered, mode=mode, stats_cols=stats,
+        idempotency_token=idempotency_token, op_info=op_info,
+    )
+    if base:
+        VersionedTable(spark, base["path"]).register_consumer(
+            index_path, best_effort=True
+        )
+    return v
 
 
 def build_neardup_index(
@@ -115,52 +162,24 @@ def build_neardup_index(
     """Build (or rebuild) the persisted dedup index from the current
     corpus — one atomic `VersionedTable` commit; returns the version.
 
-    Layout (r11, VERDICT r10 #3): entries are written KEY-CLUSTERED —
-    range-partitioned and sorted by ``doc_id`` (``num_files`` output
-    files; default ``spark.sql.shuffle.partitions``) with per-file
-    min/max stats recorded when ``doc_id`` is numeric — so
-    ``sync_neardup_index``'s copy-on-write CDC apply prunes its probe
-    and rewrite to the files whose key range admits the changed docs,
-    turning the r10 "sync rewrites the whole index" cost term into a
-    touched-file term for range-local windows.
+    Layout: entries are written KEY-CLUSTERED (``num_files`` files;
+    default ``spark.sql.shuffle.partitions``) by the shared commit tail
+    `_publish_entries`, so a sync rewrites only the files it touches.
 
-    ``base_path`` (r10, VERDICT r9 #8): when ``docs`` is the CURRENT
-    snapshot of a corpus maintained as a ``VersionedTable`` (i.e.
-    ``docs = VersionedTable(spark, base_path).read()``), pass its path —
-    the build records (path, version) in the index commit so
-    ``neardup_index_staleness`` can later classify corpus movement from
-    manifests alone: an OPTIMIZE leaves the signatures valid, appends
-    are the normal incremental-ingest flow, but an UPSERT/DELETE that
-    changes a document's text makes its stored shingle set / signature
-    silently wrong — that case is loudly rejected instead of decaying
-    recall in the dark. Pass ``base_version`` (the version ``docs`` was
-    read at) when concurrent corpus writers are possible — resolving
-    the current version here would stamp over (and silently skip) a
-    rewrite landing between your read and this build (see
+    ``base_path``: when ``docs`` is the CURRENT snapshot of a corpus
+    kept as a ``VersionedTable`` (``VersionedTable(spark,
+    base_path).read()``), the build records (path, version) so
+    ``neardup_index_staleness`` can classify corpus movement from
+    manifests alone — an UPSERT/DELETE that changes a document's text
+    makes its stored entry silently wrong, and is rejected loudly
+    instead. Pass ``base_version`` (the version ``docs`` was read at)
+    when concurrent corpus writers are possible: resolving the current
+    version here would stamp over a racing rewrite (see
     ``table.resolve_base_stamp``)."""
-    from ..table import resolve_base_stamp
-
-    base = (
-        resolve_base_stamp(spark, base_path, base_version)
-        if base_path is not None
-        else None
+    return _publish_entries(
+        spark, neardup_index_entries(docs), index_path, "overwrite",
+        "neardup_index_build", num_files, base_path, base_version,
     )
-    entries, stats = _cluster_entries(neardup_index_entries(docs), num_files)
-    v = VersionedTable(spark, index_path).commit(
-        entries,
-        mode="overwrite",
-        stats_cols=stats,
-        op_info={"op": "neardup_index_build", "base": base} if base else None,
-    )
-    if base:
-        # self-register on the base (r13, VERDICT r12 #2) AFTER the
-        # commit — a failed build must not leave a phantom registry
-        # entry; best-effort because the registry is advisory and the
-        # base may be read-only to this job
-        VersionedTable(spark, base["path"]).register_consumer(
-            index_path, best_effort=True
-        )
-    return v
 
 
 #: estimated stored-entry bytes per byte of document TEXT: `hh` holds
@@ -177,14 +196,10 @@ _ENTRY_FIXED_BYTES = 384
 
 def _num_files_for(rows: int, text_bytes: int) -> int:
     """Output file count for an append of ``rows`` documents holding
-    ``text_bytes`` of text: the estimated stored entry bytes (shingle-hash
-    arrays scale with document text) through ``table.files_for_bytes`` —
-    so a LARGE batch lands as several key-local files
-    instead of one oversized file spanning the whole batch key range
-    (which every later copy-on-write sync would rewrite wholesale,
-    ADVICE r11). The one sizing rule of both callers: `_batch_num_files`
-    and the ingest gate, which reads the two numbers off the accepted
-    frame's own count aggregation."""
+    ``text_bytes`` of text: the estimated stored entry bytes through
+    ``table.files_for_bytes``, so a LARGE batch lands as several
+    key-local files, not one key-spanning file every later sync would
+    rewrite wholesale. Used by `_batch_num_files` and the ingest gate."""
     return files_for_bytes(
         rows * _ENTRY_FIXED_BYTES
         + int(text_bytes * _ENTRY_BYTES_PER_TEXT_BYTE)
@@ -193,17 +208,11 @@ def _num_files_for(rows: int, text_bytes: int) -> int:
 
 def _batch_num_files(spark: SparkSession, docs: DataFrame) -> int:
     """`_num_files_for` over the batch's MEASURED text volume: one
-    column-pruned ``(count, sum(length(text)))`` agg.
-
-    r13 (ADVICE r12): measuring the batch itself replaced the earlier
-    input-file-bytes proxy + row cap — the proxy over-counted a FILTERED
-    read of a big table (``inputFiles()`` lists every scanned file) and
-    the row cap that papered over it suppressed the byte signal for
-    low-count batches of very large documents (2k docs × 1 MB capped to
-    ONE multi-GiB key-spanning file). The agg reads only the rows that
-    are actually in the batch, so both failure modes are gone; cost is
-    one batch-sized pass over a column the append is about to shingle
-    anyway."""
+    ``(count, sum(length(text)))`` agg over the rows actually in the
+    batch (an input-file-bytes proxy over-counts a FILTERED read of a
+    big table; a row cap would hide low-count batches of very large
+    documents). `append_to_neardup_index` sizes with it when no
+    ``num_files`` is given."""
     row = docs.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.length("text")).alias("tb")
     ).first()
@@ -219,48 +228,20 @@ def append_to_neardup_index(
     base_version: int | None = None,
     num_files: int | None = None,
 ) -> int:
-    """Append an accepted batch's entries to the index as a new version.
-    Pass the batch id as ``idempotency_token`` for exactly-once semantics
-    under retries (a replayed commit is a no-op returning the existing
-    version — same contract as the streaming upsert sink). ``base_path``
-    re-records the corpus sync point so ``neardup_index_staleness``
-    measures from it, not the original build. Pass ``base_version`` —
-    the corpus version this batch brings the index level with — when
-    concurrent writers are possible: resolving the current version at
-    call time is a TOCTOU that would stamp over (and silently skip) a
-    racing rewrite (``table.resolve_base_stamp``). ``num_files`` sizes
-    the batch's key-clustered output (default: byte-derived — see
-    ``_batch_num_files``)."""
-    from ..table import resolve_base_stamp
-
-    base = (
-        resolve_base_stamp(spark, base_path, base_version)
-        if base_path is not None
-        else None
+    """Append an accepted batch's entries (``docs``: see `_entries_of`)
+    to the index as a new version. Pass the batch id as
+    ``idempotency_token`` for exactly-once semantics under retries (a
+    replayed commit is a no-op returning the existing version).
+    ``base_path`` / ``base_version`` re-record the corpus sync point, as
+    in `build_neardup_index`. ``num_files`` sizes the batch's
+    key-clustered output (default: `_batch_num_files`)."""
+    entries = _entries_of(docs, "append_to_neardup_index")
+    if num_files is None:
+        num_files = _batch_num_files(spark, entries)
+    return _publish_entries(
+        spark, entries, index_path, "append", "neardup_index_append",
+        num_files, base_path, base_version, idempotency_token,
     )
-    # batches cluster within themselves (byte-sized file count) and
-    # record key stats, so appended files stay prunable by later syncs
-    entries, stats = _cluster_entries(
-        neardup_index_entries(docs),
-        num_files if num_files is not None else _batch_num_files(spark, docs),
-    )
-    # op name recorded even without a base stamp: the maintain policy's
-    # fragmentation baseline must classify appends as PATCHES (their
-    # batch file may span the key range), never as the clustered shape
-    op_info = {"op": "neardup_index_append"}
-    if base:
-        op_info["base"] = base
-    v = VersionedTable(spark, index_path).commit(
-        entries, mode="append",
-        stats_cols=stats,
-        idempotency_token=idempotency_token,
-        op_info=op_info,
-    )
-    if base:
-        VersionedTable(spark, base["path"]).register_consumer(
-            index_path, best_effort=True
-        )  # post-commit + best-effort: no phantoms, no write dependency
-    return v
 
 
 def neardup_index_staleness(
@@ -352,20 +333,11 @@ def sync_neardup_index(
     (e.g. only OPTIMIZE) is a no-op returning the current index version.
     Returns the index version after the sync.
 
-    Cost shape (measured r10, re-measured r11 on the key-clustered
-    layout — SCALING.md "Dedup-index sync"): the change-feed read and
-    entry recompute are ∝ changed docs, and since r11 the index is
-    built key-clustered with per-file stats, so the CDC apply probes
-    and rewrites ONLY the files whose doc_id range admits the changed
-    keys — a range-local 1% window at 500k docs touched 1 of 32 files
-    and synced 3.5× FASTER than a rebuild (files_probed=1,
-    files_carried=31), and at that corpus size even a hash-scattered
-    window wins 3.9× while rewriting every file (rebuild re-shingles
-    the whole corpus; sync's worst case is an index-sized IO rewrite).
-    At small corpora (50k docs) rebuild still wins (0.6-0.8×:
-    re-shingling is cheap there and the sync's fixed job-chain
-    overheads dominate). Either way the result is row-identical to a
-    rebuild (asserted in tests and by the measurement tool)."""
+    Cost shape (SCALING.md "Dedup-index sync"): ∝ changed docs — a
+    range-local 1% window at 500k docs probed 1 of 32 index files and
+    synced 3.5× faster than a rebuild; at 50k docs rebuild still wins
+    (0.6-0.8×, `MAINTAIN_REBUILD_BELOW_BYTES`). Either way the result is
+    row-identical to a rebuild (asserted in tests and by the tool)."""
     from ..table import collapse_row_changes, latest_base_stamp
 
     idx = VersionedTable(spark, index_path)
@@ -525,16 +497,15 @@ def _bands(entries: DataFrame, *carry: str) -> DataFrame:
 
 def _incremental_pairs(
     spark: SparkSession,
-    new_docs: DataFrame,
+    new: DataFrame,
     index_path: str,
     version: int | None = None,
     threshold: float = JACCARD_THRESHOLD,
 ) -> DataFrame:
     """Unordered core of `minhash_neardup_incremental` (the ingest gate
-    consumes it directly): (doc_a, doc_b, jaccard), each pair once."""
-    _require_doc_frame(new_docs, "minhash_neardup_incremental")
+    consumes it directly) over the batch's materialized entries ``new``
+    (doc_id, hh, sig): (doc_a, doc_b, jaccard), each pair once."""
     idx = VersionedTable(spark, index_path).read(version)
-    new = neardup_index_entries(new_docs).localCheckpoint(eager=True)
     nb = _bands(new)
     sh = new.select("doc_id", "hh")
 
@@ -606,9 +577,9 @@ def minhash_neardup_incremental(
     Jaccard filter against the batch's broadcast shingle sets in the
     same stage. Batch-internal candidates come from in-bucket expansion
     of the batch's own bands (tiny). The one BOUNDED frame the plan
-    reuses — the batch entries, read by the band rows, the broadcast
-    shingle sets and the batch-internal branch — is eagerly
-    localCheckpoint'd; nothing corpus- or collision-sized is.
+    reuses is the batch's entries (`_entries_of`: pass them,
+    materialized, to reuse them for a following append); nothing corpus-
+    or collision-sized is materialized.
 
     A doc_id present in BOTH the batch and the index is treated as the
     same document (self-pairs excluded, each pair emitted once) — append
@@ -616,5 +587,6 @@ def minhash_neardup_incremental(
     already appended.
     """
     return _incremental_pairs(
-        spark, new_docs, index_path, version, threshold
+        spark, _entries_of(new_docs, "minhash_neardup_incremental"),
+        index_path, version, threshold,
     ).orderBy("doc_a", "doc_b")

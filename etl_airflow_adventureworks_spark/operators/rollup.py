@@ -1731,16 +1731,18 @@ class _Rollup(TableLayout):
         how many rollup files it would touch)."""
         spark, src, dims, cow = self.spark, self.src, self.dims, self.cow
         reasons = []
-        if self.mode == "group_local":
-            delta = src.row_changes(reflected, v_src)
-            dim_tmp = [f"__gl_d{i}" for i in range(len(dims))]
-            keys = (
-                delta.select(
-                    *[F.expr(d).alias(t) for d, t in zip(dims, dim_tmp)]
-                )
+        if self.mode == "group_local" or (choice == "refresh" and dims):
+            # the window's distinct touched dims, built once for both
+            # claims: one change-feed read, one distinct shuffle
+            touched = (
+                src.row_changes(reflected, v_src)
+                .select(*[F.expr(d) for d in dims])
                 .distinct()
                 .localCheckpoint(eager=True)
             )
+        if self.mode == "group_local":
+            dim_tmp = [f"__gl_d{i}" for i in range(len(dims))]
+            keys = touched.toDF(*dim_tmp)
             n_groups = keys.count()
             small = n_groups <= _GROUP_KEYS_COLLECT_MAX
             pruned, files, _schema = _prune_candidates(
@@ -1757,12 +1759,6 @@ class _Rollup(TableLayout):
                 f"source file(s) for {n_groups} touched group(s)"
             )
         if choice == "refresh" and dims:
-            touched = (
-                src.row_changes(reflected, v_src)
-                .select(*[F.expr(d) for d in dims])
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
             will_cow = cow if isinstance(cow, bool) else (
                 self.vt.visible_bytes(COW_REFRESH_MIN_BYTES)
                 >= COW_REFRESH_MIN_BYTES

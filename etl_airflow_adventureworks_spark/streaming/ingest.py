@@ -7,7 +7,9 @@ re-shuffling the corpus. This composes three proven pieces:
 
 - `operators.dedup_incremental`: batch-vs-index near-dup pairs whose
   only corpus access is ONE column-pruned SCAN of the persisted MinHash
-  index, candidates verified in the same pass (never a corpus shuffle);
+  index, candidates verified in the same pass (never a corpus shuffle),
+  and the index's one commit tail — the gate computes the batch's
+  MinHash entries ONCE and probes, rejects and commits from them;
 - `table.VersionedTable`: atomic manifests with idempotency tokens, so
   a crash-replayed micro-batch is a detected no-op per table;
 - Structured Streaming `foreachBatch` with a checkpoint, so the source
@@ -36,7 +38,7 @@ charter E2+E5 composition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import JACCARD_THRESHOLD
@@ -45,8 +47,9 @@ from ..operators.dedup_incremental import (
     _num_files_for,
     _require_doc_frame,
     append_to_neardup_index,
+    neardup_batch_entries,
 )
-from ..table import VersionedTable
+from ..table import VersionedTable, files_for_bytes
 
 
 def rejected_doc_ids(pairs: DataFrame, batch_ids: DataFrame) -> DataFrame:
@@ -90,23 +93,27 @@ def ingest_batch_with_dedup(
     (non-streaming) ingestion; `stream_ingest_with_dedup` calls it per
     micro-batch with the streaming epoch as the idempotency basis.
 
-    Each batch-sized frame is computed once: the batch, its index
-    entries (inside the pair probe), the rejected ids and the accepted
-    rows are each materialized once (``localCheckpoint``), and the index
-    is scanned once. One aggregation over the batch's id counts gives
-    its size and rules out repeated ids; one over the accepted rows
-    gives the result counts and the append's file count.
+    The batch's entries (`neardup_batch_entries`) are computed once,
+    spread over the session's cores, and materialized once: the id
+    check, the probe, the rejection and both commits read that frame,
+    and the index is scanned once. The jobs that materialize it and the
+    accepted rows also observe the counts and text bytes that check the
+    ids and size both commits.
     """
     _require_doc_frame(batch, "ingest_batch_with_dedup")
     spark = batch.sparkSession
     token = f"epoch:{epoch_id}"
-    batch = batch.select("doc_id", "text").localCheckpoint(eager=True)
-    shape = (
-        batch.groupBy("doc_id").count()
-        .agg(F.sum("count").alias("rows"), F.max("count").alias("most"))
-        .first()
-    )
-    n = int(shape["rows"] or 0)
+    # a one-file batch is one partition: spread it by doc_id so its
+    # entries are computed on every core, not in one task — and so the
+    # per-id count is a partition-local window, not another shuffle
+    shape = Observation()
+    batch = neardup_batch_entries(
+        batch.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .withColumn("n_id", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+        .observe(shape, F.count(F.lit(1)).alias("rows"), F.max("n_id").alias("most"))
+    ).localCheckpoint(eager=True)
+    shape = shape.get
+    n = int(shape["rows"])
     if not n:
         # no-data micro-batch: nothing to admit, and skipping the token
         # is safe (a replayed empty batch re-skips identically)
@@ -124,24 +131,25 @@ def ingest_batch_with_dedup(
     pairs = _incremental_pairs(spark, batch, index_path, threshold=threshold)
     if audit_path is not None:
         pairs = pairs.localCheckpoint(eager=True)  # the audit commit reads it too
-    bad = rejected_doc_ids(pairs, batch.select("doc_id")).localCheckpoint(eager=True)
-    accepted = batch.join(F.broadcast(bad), "doc_id", "left_anti").localCheckpoint(
-        eager=True
+    bad = rejected_doc_ids(pairs, batch.select("doc_id"))
+    size = Observation()
+    accepted = (
+        batch.join(F.broadcast(bad), "doc_id", "left_anti")
+        .observe(size, F.count(F.lit(1)).alias("rows"),
+                 F.sum(F.length("text")).alias("tb"))
+        .localCheckpoint(eager=True)
     )
-    size = accepted.agg(
-        F.count(F.lit(1)).alias("rows"), F.sum(F.length("text")).alias("tb")
-    ).first()
-    n_acc = int(size["rows"])
+    n_acc, tb = int(size.get["rows"]), int(size.get["tb"] or 0)
 
-    # through the shared append path (r12): the batch's entries land
-    # key-clustered with doc_id stats and a patch-op marker, so later
-    # syncs can PRUNE to them and the maintain policy's fragmentation
-    # baseline never mistakes an epoch's append for a clustered layout
+    # through the shared append path: key-clustered, with doc_id stats
+    # and a patch-op marker, from the entries the probe read
     append_to_neardup_index(spark, accepted, index_path,
                             idempotency_token=token,
-                            num_files=_num_files_for(n_acc, int(size["tb"] or 0)))
+                            num_files=_num_files_for(n_acc, tb))
+    # sized by its text bytes, not by the spread frame's partitions
     VersionedTable(spark, corpus_path).commit(
-        accepted, mode="append", idempotency_token=token
+        accepted.select("doc_id", "text").coalesce(files_for_bytes(tb)),
+        mode="append", idempotency_token=token,
     )
     if audit_path is not None:
         VersionedTable(spark, audit_path).commit(

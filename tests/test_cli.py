@@ -159,12 +159,19 @@ def test_dedup_index_subcommands_round_trip(spark, tmp_path, capsys):
     assert (7, 100) in rows
     assert all(101 not in p for p in rows)
 
+    from etl_airflow_adventureworks_spark.table import VersionedTable
+
+    index = VersionedTable(spark, idx)
+    assert index.read().count() == 32  # the corpus plus both batch docs
+
     # replaying the accept with the same token must NOT create version 3
     assert main([
         "dedup-check", "--batch", bdir, "--index", idx, "--accept",
         "--token", "b1",
     ]) == 0
     assert "version 2" in capsys.readouterr().out
+    assert index.versions()[-1] == 2
+    assert index.read().count() == 32
 
 
 def test_ingest_subcommand_gate_and_replay(spark, tmp_path, capsys):

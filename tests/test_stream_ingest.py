@@ -26,6 +26,7 @@ from etl_airflow_adventureworks_spark.operators.dedup import (
 )
 from etl_airflow_adventureworks_spark.operators.dedup_incremental import (
     build_neardup_index,
+    neardup_index_entries,
 )
 from etl_airflow_adventureworks_spark.streaming.ingest import (
     ingest_batch_with_dedup,
@@ -202,7 +203,7 @@ def test_batch_with_duplicate_ids_fails_before_commit(spark, tmp_path):
 
 #: Spark jobs one small `ingest_batch_with_dedup` epoch may run; the
 #: gate computes each batch-sized frame once and scans the index once
-EPOCH_JOB_BUDGET = 26
+EPOCH_JOB_BUDGET = 16
 
 
 def test_batch_gate_job_budget(spark, tmp_path):
@@ -231,3 +232,36 @@ def test_empty_batch_touches_no_table(spark, tmp_path):
     assert ingest_batch_with_dedup(empty, idx, cor, 1) == {
         "accepted": 0, "rejected": 0}
     assert [VersionedTable(spark, p).versions() for p in (idx, cor)] == vers
+
+
+def test_gate_appends_the_entries_it_probed(spark, tmp_path):
+    """One gated epoch over a one-file batch: the index rows it adds are
+    exactly the accepted docs' entries (the probe's entries, not a
+    recomputation that could drift), rejected docs are absent, and the
+    epoch adds one corpus file and one index file, however many
+    partitions the gate spreads the batch over."""
+    corpus, idx, cor = _bootstrap(spark, tmp_path)
+    staging = tmp_path / "staging"
+    os.makedirs(staging, exist_ok=True)
+    rows = [(100 + i, _text(100 + i)) for i in range(30)]
+    rows += [(130, _text(3, "zz1")), (131, _text(104, "zz2"))]  # dup corpus 3, batch 104
+    path = _stage_file(spark, staging, "b1", rows)
+    before = {p: set(VersionedTable(spark, p).manifest()["files"]) for p in (idx, cor)}
+
+    r = ingest_batch_with_dedup(spark.read.parquet(path), idx, cor, 1)
+    assert r == {"accepted": 30, "rejected": 2}
+    added = {}
+    for p in (idx, cor):
+        man = VersionedTable(spark, p).manifest()
+        added[p] = sorted(set(man["files"]) - before[p])
+        assert len(added[p]) == 1, (p, added[p])
+    assert VersionedTable(spark, idx).manifest()["op"] == {"op": "neardup_index_append"}
+
+    def snap(df):
+        return sorted((r.doc_id, list(r.hh), list(r.sig))
+                      for r in df.select("doc_id", "hh", "sig").collect())
+
+    new_rows = spark.read.parquet(f"{idx}/{added[idx][0]}")
+    accepted = spark.read.parquet(f"{cor}/{added[cor][0]}")
+    assert {r.doc_id for r in accepted.collect()} == set(range(100, 130))
+    assert snap(new_rows) == snap(neardup_index_entries(accepted))
